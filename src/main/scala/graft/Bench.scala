@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench harness: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -43,14 +41,8 @@ object Bench {
       System.err.println(f"[bench] pre-flight: starting CONTENDED at " +
         f"load $preLoad%.2f (> $loadGate%.1f after ${gateWaitSec}s grace)")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -187,7 +179,7 @@ object Bench {
     // file (full precision, all fields), which is also the committed
     // in-repo record the judge can diff per-query times from.
     val qs3 = results.map { case (k, v) =>
-      "\"" + k + "\":" + f"${v._1}%.3f" }.mkString("{", ",", "}")
+      "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v._1) }.mkString("{", ",", "}")
     val jsonStdout = s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_failed":${failedNames.size},"failed":$failed,"contended":$contended,"queries":$qs3,"value":$total}"""
     // Belt and braces: persist the complete JSON where the judge can
     // read it even if the driver's stdout capture mangles the line —

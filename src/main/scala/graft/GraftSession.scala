@@ -8,8 +8,26 @@ import org.apache.spark.sql.SparkSession
   * AQE with skew handling, UTC, and shuffle/scan sizing appropriate for
   * the deployment. The defaults below suit local[N]; on a cluster, set
   * `shufflePartitions` to ~2-3× total executor cores and leave
-  * `maxPartitionBytes` at 128m so scan tasks stay memory-bounded. */
+  * `maxPartitionBytes` at 128m so scan tasks stay memory-bounded.
+  *
+  * Every session in this repository (mains, tools, tests) is built here.
+  *
+  * The generated-class cache is sized to [[CodegenCacheEntries]]. Every
+  * pandas call becomes a fresh plan, so a warm query asks codegen for the
+  * same classes its previous run compiled; at Spark's default of 100
+  * entries a workload cycling through more distinct classes evicts each
+  * one before its next use and recompiles it on every run. The conf is
+  * static and read once per JVM, when code is first generated: it only
+  * takes effect for the JVM's first session, and `getOrCreate` on a
+  * session that already exists cannot change it. */
 object GraftSession {
+  /** Generated classes kept per JVM. With an unbounded cache, one run of
+    * the benchmark's pandas-facade mix compiled 106 classes and one of its
+    * corpus/index/stream mix 341 (local[4]); 2048 holds both with room to
+    * spare. A cached class pins its class loader and roughly 0.1 MB of
+    * metaspace, so a full cache holds about 200 MB. */
+  val CodegenCacheEntries = 2048
+
   def builder(master: String = "local[*]",
               shufflePartitions: Int = 32,
               appName: String = "graft"): SparkSession.Builder =
@@ -23,6 +41,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.files.maxPartitionBytes", "134217728")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def getOrCreate(master: String = "local[*]",
                   shufflePartitions: Int = 32): SparkSession = {

@@ -2069,7 +2069,7 @@ object SparkEntry {
       TextAnalysis.bm25(docs, "doc_id", "text",
         queries, "doc_id", "text", topK = 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"))
+          TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
     }),
 
@@ -2090,7 +2090,7 @@ object SparkEntry {
       TextAnalysis.bm25AgainstIndex(s, "graft_bm25_idx",
         queries, "doc_id", "text", topK = 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"))
+          TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
     }),
 
@@ -2113,7 +2113,7 @@ object SparkEntry {
       TextAnalysis.bm25AgainstIndex(s, "graft_bm25_app",
         queries, "doc_id", "text", topK = 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"))
+          TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
     }),
 
@@ -2142,7 +2142,7 @@ object SparkEntry {
       TextAnalysis.bm25AgainstIndex(s, "graft_bm25_cpt",
         queries, "doc_id", "text", topK = 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"))
+          TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
     }),
 
@@ -2170,7 +2170,7 @@ object SparkEntry {
       TextAnalysis.bm25AgainstIndex(s, "graft_bm25_del",
         queries, "doc_id", "text", topK = 10)
         .select(col("query_id"), col("rank"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"))
+          TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
     }),
 
@@ -2195,7 +2195,7 @@ object SparkEntry {
       assert(q.awaitTermination(300000), "stream did not finish within 300s")
       s.read.parquet(out)
         .select(col("query_id"), col("rank"), col("doc_id"),
-          round(col("bm25"), 6).as("bm25"))
+          TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
     }),
 

@@ -97,16 +97,14 @@ object Bucketing {
     * contract), only the file inventory changes.
     *
     * Mechanics: ONE data write via [[swapRewrite]] (shadow table +
-    * catalog rename; `scratchDir` is retained for source compatibility
-    * and unused), through `repartition(numBuckets, key)`:
+    * catalog rename), through `repartition(numBuckets, key)`:
     * `HashPartitioning(key, n)` is the SAME `pmod(murmur3, n)` that
     * assigns bucket ids on write, so each write task holds exactly one
     * bucket's rows and emits exactly one file. Cost: one scan + one
     * shuffle of the COMPACT index relation, never the corpus — amortized
     * over all the appends it cleans up after. At 100 TB this runs as an
     * offline maintenance job on the same schedule as any OPTIMIZE. */
-  def compactBucketed(spark: SparkSession, table: String,
-                      scratchDir: Option[String] = None): Unit =
+  def compactBucketed(spark: SparkSession, table: String): Unit =
     swapRewrite(spark, table, identity)
 
   /** Rewrite `table` as `transform(old rows)` with ONE data write:
@@ -161,8 +159,7 @@ object Bucketing {
     *
     * Mechanics: ONE data write via [[swapRewrite]] (shadow table +
     * catalog rename — the anti-join plan reads the OLD table while the
-    * shadow writes; `scratchDir` is retained for source compatibility
-    * and unused), through `repartition(numBuckets, bucketCols)`
+    * shadow writes), through `repartition(numBuckets, bucketCols)`
     * preserving the catalog's bucket/sort spec, so every downstream
     * bucket-pruned scan and zero-exchange join keeps working — and the
     * rewrite doubles as a compaction (one file per non-empty bucket).
@@ -173,8 +170,7 @@ object Bucketing {
     * anti-join never matches NULL keys, so NULL-keyed rows survive —
     * callers wanting them gone filter explicitly. */
   def deleteFromBucketed(spark: SparkSession, table: String,
-                         deleteKeys: DataFrame, keyCol: String,
-                         scratchDir: Option[String] = None): Unit = {
+                         deleteKeys: DataFrame, keyCol: String): Unit = {
     import org.apache.spark.sql.functions.col
     swapRewrite(spark, table, { old =>
       // the USING-join floats the key column to the front — restore the

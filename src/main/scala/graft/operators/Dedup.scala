@@ -905,20 +905,6 @@ object Dedup {
       .where(col("containment") >= threshold)
   }
 
-  /** [[containmentPairs]] as DuckDB SQL (exhaustive all-pairs — the
-    * posting-list route provably finds every pair with a shared
-    * shingle, and containment > 0 requires one). */
-  def containmentPairsOracleSql(n: Int, threshold: Double): String = {
-    val sh = shinglesOracleSqlExpr("text", n)
-    s"""WITH sh AS (SELECT doc_id, $sh AS s FROM documents),
-       |c AS (SELECT a.doc_id AS id_l, b.doc_id AS id_r,
-       |   CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-       |   least(len(a.s), len(b.s)) AS containment
-       | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-       |SELECT id_l, id_r, round(containment, 6) AS containment
-       |FROM c WHERE containment >= $threshold ORDER BY id_l, id_r""".stripMargin
-  }
-
   /** Benchmark decontamination report: which TRAINING documents share at
     * least `minHits` distinct word n-grams with which EVALUATION
     * documents — the train/test contamination sweep every LLM pipeline
@@ -1702,13 +1688,10 @@ object Dedup {
     * [[deleteFromNearDupIndex]] recipe on the signature layout. */
   def deleteFromHammingIndex(spark: org.apache.spark.sql.SparkSession,
                              table: String, deleteIds: DataFrame,
-                             idCol: String,
-                             scratchDir: Option[String] = None): Unit = {
+                             idCol: String): Unit = {
     val del = deleteIds.select(col(idCol).cast("long").as("__id")).distinct()
-    Bucketing.deleteFromBucketed(spark, s"${table}_bands", del, "__id",
-      scratchDir)
-    Bucketing.deleteFromBucketed(spark, s"${table}_sig", del, "__id",
-      scratchDir)
+    Bucketing.deleteFromBucketed(spark, s"${table}_bands", del, "__id")
+    Bucketing.deleteFromBucketed(spark, s"${table}_sig", del, "__id")
   }
 
   /** Tombstone-apply for the near-dup index: rewrite BOTH index tables
@@ -1722,13 +1705,10 @@ object Dedup {
     * index are no-ops (replayable takedown lists). */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                              table: String, deleteIds: DataFrame,
-                             idCol: String,
-                             scratchDir: Option[String] = None): Unit = {
+                             idCol: String): Unit = {
     val del = deleteIds.select(col(idCol).as("__id")).distinct()
-    Bucketing.deleteFromBucketed(spark, s"${table}_bands", del, "__id",
-      scratchDir)
-    Bucketing.deleteFromBucketed(spark, s"${table}_sh", del, "__id",
-      scratchDir)
+    Bucketing.deleteFromBucketed(spark, s"${table}_bands", del, "__id")
+    Bucketing.deleteFromBucketed(spark, s"${table}_sh", del, "__id")
   }
 
   /** Probe a [[buildNearDupIndex]] index with a new batch: batch docs are

@@ -248,9 +248,18 @@ object Embedding {
                       materializeEvery: Int = 1,
                       negDist: String = "uniform",
                       initIn: Option[DataFrame] = None,
-                      initOut: Option[DataFrame] = None): (DataFrame, DataFrame) =
+                      initOut: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    // before sgnsPrepare: a bad argument must fail before any Spark job
+    checkFitArgs(dim, iters, materializeEvery)
     sgnsFitPrepared(sgnsPrepare(pairs, aCol, bCol, negs, negDist, scratchDir),
       dim, iters, lr, materializeEvery, initIn, initOut)
+  }
+
+  private def checkFitArgs(dim: Int, iters: Int, materializeEvery: Int): Unit = {
+    require(dim >= 1 && dim <= 64, s"dim must be in [1,64], got $dim")
+    require(iters >= 1 && iters <= 8, s"iters must be in [1,8], got $iters")
+    require(materializeEvery >= 1, "materializeEvery must be >= 1")
+  }
 
   /** The fixed (matrix-independent) training state of a SGNS fit: the
     * materialized positive+negative training relation, the vocab, and
@@ -367,9 +376,7 @@ object Embedding {
                       lr: Double = 0.5, materializeEvery: Int = 1,
                       initIn: Option[DataFrame] = None,
                       initOut: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    require(dim >= 1 && dim <= 64, s"dim must be in [1,64], got $dim")
-    require(iters >= 1 && iters <= 8, s"iters must be in [1,8], got $iters")
-    require(materializeEvery >= 1, "materializeEvery must be >= 1")
+    checkFitArgs(dim, iters, materializeEvery)
     val scratch = prep.scratch
     import scratch.{materialize, drop}
     val train = prep.train

@@ -288,17 +288,6 @@ object PublicSuffix {
         Seq(s"__t$k", s"__exc$k", s"__wild$k")): _*)
   }
 
-  /** Per-registered-domain stats over raw URLs, PSL-exact — the
-    * [[UrlOps.domainStats]] aggregate with [[registeredDomainPsl]] as
-    * the key. One broadcast-joined projection + one hash aggregate. */
-  def domainStatsPsl(df: DataFrame, urlCol: String,
-                     charsCol: String): DataFrame =
-    registeredDomainPsl(
-      df.withColumn("__host", UrlOps.hostOf(col(urlCol))), "__host")
-      .groupBy("domain")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col(charsCol).cast("long")).as("n_chars"))
-
   /** [[registeredDomainPsl]] as DuckDB SQL over a relation exposing a
     * lower-case `hostExpr`: the SAME snapshot rules as a VALUES
     * relation, the same three trailing tails, the same precedence

@@ -890,10 +890,9 @@ object Similarity {
     * no-ops. */
   def deleteFromVectorIndex(spark: org.apache.spark.sql.SparkSession,
                             table: String, deleteIds: DataFrame,
-                            idCol: String,
-                            scratchDir: Option[String] = None): Unit = {
+                            idCol: String): Unit = {
     val del = deleteIds.select(col(idCol).cast("long").as("__cid")).distinct()
-    Bucketing.deleteFromBucketed(spark, table, del, "__cid", scratchDir)
+    Bucketing.deleteFromBucketed(spark, table, del, "__cid")
   }
 
   /** Read back a [[buildIvfPqIndex]] index's persisted codebook as the

@@ -27,18 +27,8 @@ object TextAnalysis {
   def bpeishTokenCount(text: Column): Column =
     regexp_count(text, lit("\\w+|[^\\w\\s]"))
 
-  def charCount(text: Column): Column = length(text)
-
   def punctRatio(text: Column): Column =
     regexp_count(text, lit("[^\\w\\s]")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
-  def digitRatio(text: Column): Column =
-    regexp_count(text, lit("[0-9]")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
-  def upperRatio(text: Column): Column =
-    regexp_count(text, lit("[A-Z]")).cast("double") /
       greatest(length(text), lit(1)).cast("double")
 
   def meanWordLength(text: Column): Column = {
@@ -580,10 +570,9 @@ object TextAnalysis {
     * text. */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
                           table: String, deleteIds: DataFrame,
-                          idCol: String,
-                          scratchDir: Option[String] = None): Unit = {
+                          idCol: String): Unit = {
     Bucketing.deleteFromBucketed(spark,
-      table, deleteIds.select(col(idCol).as("__did")), "__did", scratchDir)
+      table, deleteIds.select(col(idCol).as("__did")), "__did")
     // df/stats from the SURVIVING postings — the buildBm25Index step
     // verbatim: reads the just-rewritten postings table, writes the two
     // side tables (no self-read, no scratch hop needed)
@@ -644,17 +633,31 @@ object TextAnalysis {
         col("__e.id").as("doc_id"), (col("__e.score") / 1e9).as("bm25"))
   }
 
+  /** A [[bm25]] score rounded to 6 decimals in the integer domain:
+    * recover the exact nano-unit sum (below 2^53, so the double holds it
+    * exactly), round it half up to micro-units (scores are non-negative,
+    * so `div` truncating `+ 500` does that), divide. `round(bm25, 6)`
+    * rounds the double, and engines disagree on half-way ties: Spark
+    * rounds the decimal form 66.3606885 up, DuckDB the binary double
+    * just below it down. [[bm25MicroSql]] is the same rounding for the
+    * oracle. */
+  def bm25Micro(score: Column): Column =
+    call_function("div", round(score * 1e9).cast("long") + 500, lit(1000)) / 1e6
+
+  /** [[bm25Micro]] in DuckDB SQL, over an integer nano-unit sum. */
+  def bm25MicroSql(nanos: String): String = s"(($nanos + 500) // 1000) / 1e6"
+
   /** [[bm25]] as DuckDB SQL over `(doc_id, text)` relations named `docs`
     * and `qs` (provide via WITH prefix): identical tokenization, idf,
     * quantization and integer summation. */
   def bm25OracleSql(k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): String =
     s"""${bm25CtesSql(k1, b)}
-       |SELECT query_id, rank, doc_id, round(bm25, 6) AS bm25
+       |SELECT query_id, rank, doc_id, ${bm25MicroSql("s")} AS bm25
        |FROM rk WHERE rank <= $topK""".stripMargin
 
   /** The CTE chain behind [[bm25OracleSql]], ending at `rk(query_id,
-    * doc_id, bm25, rank)` — composable into larger oracles (the hybrid
-    * fusion reuses it). */
+    * doc_id, s, bm25, rank)` (`s` the integer nano-unit sum) — composable
+    * into larger oracles (the hybrid fusion reuses it). */
   def bm25CtesSql(k1: Double = 1.2, b: Double = 0.75): String =
     s"""toks AS (SELECT doc_id AS did,
        |    unnest(list_filter(string_split_regex(trim(text), '\\s+'),
@@ -678,7 +681,7 @@ object TextAnalysis {
        |  FROM qt JOIN tf USING (t) JOIN dfr USING (t) JOIN dl USING (did)
        |  CROSS JOIN st WHERE tf.did <> qt.qid),
        |sm AS (SELECT qid, did, sum(q) AS s FROM pt GROUP BY qid, did),
-       |rk AS (SELECT qid AS query_id, did AS doc_id,
+       |rk AS (SELECT qid AS query_id, did AS doc_id, s,
        |    CAST(s AS DOUBLE) / 1e9 AS bm25,
        |    row_number() OVER (PARTITION BY qid
        |      ORDER BY CAST(s AS DOUBLE) DESC, did) AS rank

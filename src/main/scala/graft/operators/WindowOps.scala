@@ -122,13 +122,6 @@ object WindowOps {
                outCol: String = "cumcount"): DataFrame =
     df.withColumn(outCol, row_number().over(spec(partitionBy, orderBy)) - 1)
 
-  /** trailing fixed-size window mean (pandas rolling(n).mean(), partial
-    * windows included like min_periods=1). */
-  def rollingMean(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[String],
-                  valueCol: String, n: Int, outCol: String = "rolling_mean"): DataFrame =
-    df.withColumn(outCol, avg(col(valueCol)).over(
-      spec(partitionBy, orderBy).rowsBetween(-(n - 1), 0)))
-
   def rank(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[String],
            outCol: String = "rank"): DataFrame =
     df.withColumn(outCol, org.apache.spark.sql.functions.rank()

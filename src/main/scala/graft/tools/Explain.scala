@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.tools.Explain <query> [sfDir]` prints the
   * formatted physical plan for one SparkEntry query — the iterate-on-plans
   * loop the brief asks for (pushdown, exchange reuse, codegen spans). */
@@ -9,13 +7,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -180,13 +180,8 @@ object PlanDigest {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else DefaultSfDir
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val lines = Tracked.map(n => render(n, digestFor(spark, n, sfDir)))

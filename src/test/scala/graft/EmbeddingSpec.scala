@@ -255,6 +255,40 @@ class EmbeddingSpec extends AnyFunSuite {
     }
   }
 
+  test("sgnsFit/sgnsFitMatrices: a bad dim, iters or materializeEvery fails before any Spark job") {
+    val pairs = Seq(("a", "b"), ("b", "a")).toDF("a", "b")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("sgns-bad-args", "invalid SGNS arguments")
+      for (fit <- Seq[() => Any](
+        () => Embedding.sgnsFit(pairs, "a", "b", dim = 0),
+        () => Embedding.sgnsFitMatrices(pairs, "a", "b", dim = 65),
+        () => Embedding.sgnsFit(pairs, "a", "b", dim = 4, iters = 0),
+        () => Embedding.sgnsFitMatrices(pairs, "a", "b", dim = 4, materializeEvery = 0)))
+        intercept[IllegalArgumentException](fit())
+      // the bus delivers job starts in order: once the sentinel's arrives,
+      // so has every job the calls above could have started
+      sc.setJobGroup("sgns-sentinel", "sentinel")
+      sc.parallelize(Seq(1)).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("sgns-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.contains("sgns-sentinel"), "the sentinel job never reached the listener")
+    val early = groups.toArray.count(_ == "sgns-bad-args")
+    assert(early == 0, s"$early Spark jobs ran before the argument check")
+  }
+
   test("sgnsFit: partition-invariant (decimal sums, no order seams)") {
     val pos = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"))
     def run(parts: Int) = Embedding.sgnsFit(

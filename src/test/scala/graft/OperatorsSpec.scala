@@ -1255,6 +1255,23 @@ class OperatorsSpec extends AnyFunSuite {
     assert(plan.contains("partial_top_k_by_score"), s"no partial top-k in:\n$plan")
   }
 
+  test("bm25Micro: a half-way tie rounds to the same micro-unit in Spark and in the DuckDB oracle") {
+    // 66,360,688,500 nano-units = 66.3606885: round(bm25, 6) gave
+    // 66.360689 in Spark but 66.360688 in DuckDB, which rounds the double
+    val nanos = Seq(66360688500L, 66360688499L, 1500L, 0L)
+    val want = Seq(66.360689, 66.360688, 0.000002, 0.0)
+    val got = nanos.map(n => Seq(n / 1e9).toDF("bm25")
+      .select(TextAnalysis.bm25Micro(col("bm25"))).as[Double].head())
+    assert(got == want)
+    // the oracle side, evaluated by DuckDB through its Python package
+    val sql = nanos.map(n => TextAnalysis.bm25MicroSql(n.toString)).mkString("SELECT ", ", ", "")
+    val out = try Some(scala.sys.process.Process(Seq("python3", "-c",
+      "import duckdb, sys; print(' '.join(repr(v) for v in duckdb.sql(sys.argv[1]).fetchone()))",
+      sql)).!!.trim) catch { case _: Exception => None }
+    assume(out.isDefined, "python3 with the duckdb package is not available")
+    assert(out.get.split(' ').map(_.toDouble).toSeq == want)
+  }
+
   test("bm25 index: probe ≡ single-shot bit for bit; postings side exchange-free; append extends") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").limit(120)

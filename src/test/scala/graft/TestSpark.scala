@@ -4,17 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("local[4]", 4, "graft-test")
       .config("spark.ui.enabled", "false")
-      // non-ANSI: the reference's SQL semantics (SURVEY.md §2.7) assume
-      // null-on-error arithmetic; IEEE behavior comes from Semantics.*
-      .config("spark.sql.ansi.enabled", "false")
-      // events.parquet carries timestamp[ns]: surface as Long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
