@@ -211,9 +211,12 @@ private[graft] trait DataFrameExtensions { this: DataFrame =>
     new DataFrame(frame.rePhysical(frame.df.orderBy(ords: _*)))
   }
 
+  /** pandas sort_index: every level in one direction, NULL labels last
+    * in both directions (na_position='last'). */
   def sortIndex(ascending: Boolean = true): DataFrame = {
     val ords = (0 until frame.nIdx).map(i =>
-      if (ascending) frame.idxCols(i).asc else frame.idxCols(i).desc)
+      if (ascending) frame.idxCols(i).asc_nulls_last
+      else frame.idxCols(i).desc_nulls_last)
     new DataFrame(frame.rePhysical(frame.df.orderBy(ords: _*)))
   }
 

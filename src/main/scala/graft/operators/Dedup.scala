@@ -93,13 +93,6 @@ object Dedup {
     labels
   }
 
-  /** The cluster-safety gate for [[duplicateClusters]]'s scratch default
-    * (delegates to the shared [[Scratch]] guard; kept as the
-    * unit-testable entry point). */
-  private[graft] def requireClusterSafeScratch(
-      isLocal: Boolean, scratchDir: Option[String]): Unit =
-    Scratch.requireClusterSafe(isLocal, scratchDir, "duplicateClusters")
-
   /** Canonical-document selection per duplicate cluster: every doc joins
     * its cluster label ([[duplicateClusters]] output; unclustered docs are
     * their own singleton cluster via the left join + coalesce), then ONE

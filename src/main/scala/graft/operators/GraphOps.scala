@@ -89,7 +89,7 @@ object GraphOps {
       s"damping $dampNum/$dampDen must be a fraction in [0, 1]")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "pageRankNano", "graft-pr", scratchDir)
-    import scratch.{materialize, drop}
+    import scratch.{materialize, snapshot}
 
     // one pass: collapse parallel edges, drop self-loops, attach total
     // out-weight — the loop input, so it is materialized once instead of
@@ -146,7 +146,6 @@ object GraphOps {
     // one-row relation so it broadcasts (never a driver-side literal)
     val nSupport = spine.where(col("is_seed") === 1)
       .agg(count(lit(1)).as("__ns"))
-    var lastMat: Option[String] = None
     var i = 0
     while (i < iters) {
       // ONE pass over the rank relation computes per-dst inflow AND the
@@ -176,13 +175,7 @@ object GraphOps {
               (CASE WHEN is_seed = 1 AND __ns > 0
                 THEN __dang DIV __ns ELSE 0L END)) DIV $dampDen"""))
             .as("r"))
-      ranks =
-        if ((i + 1) % materializeEvery == 0 || i == iters - 1) {
-          val m = materialize(next, s"iter$i")
-          lastMat.foreach(drop)
-          lastMat = Some(s"iter$i")
-          m
-        } else next
+      ranks = snapshot(next, s"iter$i", i, iters, materializeEvery)
       i += 1
     }
     ranks.select(col("node"), col("r").as("rank_nano"))
@@ -296,7 +289,7 @@ object GraphOps {
     require(materializeEvery >= 1, "materializeEvery must be >= 1")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "hitsNano", "graft-hits", scratchDir)
-    import scratch.{materialize, drop}
+    import scratch.{materialize, snapshot}
     val ew = materialize(edges
       .where(col(srcCol) =!= col(dstCol))
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -319,7 +312,6 @@ object GraphOps {
     // pageRankNano (last round always snapshots)
     var hub = nodes.select(col("node"), lit(Scale).as("h"))
     var auth: DataFrame = null
-    var lastHubMat: Option[String] = None
     var i = 0
     while (i < iters) {
       val rawA = ew.join(hub.withColumnRenamed("node", "src"), "src")
@@ -331,13 +323,7 @@ object GraphOps {
         .select(col("src").as("node"), expr("a * w").as("c"))
         .groupBy("node").agg(sum("c").as("raw"))
       val hubDf = normalize(rawH, "h")
-      hub =
-        if ((i + 1) % materializeEvery == 0 || i == iters - 1) {
-          val m = materialize(hubDf, s"hub$i")
-          lastHubMat.foreach(drop)
-          lastHubMat = Some(s"hub$i")
-          m
-        } else hubDf
+      hub = snapshot(hubDf, s"hub$i", i, iters, materializeEvery)
       i += 1
     }
     nodes
@@ -406,7 +392,7 @@ object GraphOps {
     require(materializeEvery >= 1, "materializeEvery must be >= 1")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "labelPropagation", "graft-lpa", scratchDir)
-    import scratch.{materialize, drop}
+    import scratch.{materialize, snapshot}
     import org.apache.spark.sql.expressions.Window
     val dir0 = edges.where(col(srcCol) =!= col(dstCol))
       .select(col(srcCol).as("node"), col(dstCol).as("nbr"),
@@ -416,7 +402,6 @@ object GraphOps {
         .groupBy("node", "nbr").agg(sum("w").as("w")), "und")
     var labels = und.select(col("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-    var lastMat: Option[String] = None
     var i = 0
     while (i < iters) {
       val votes = und
@@ -427,13 +412,7 @@ object GraphOps {
         .withColumn("__rn", row_number().over(win))
         .where(col("__rn") === 1)
         .select(col("node"), col("lbl"))
-      labels =
-        if ((i + 1) % materializeEvery == 0 || i == iters - 1) {
-          val m = materialize(next, s"lbl$i")
-          lastMat.foreach(drop)
-          lastMat = Some(s"lbl$i")
-          m
-        } else next
+      labels = snapshot(next, s"lbl$i", i, iters, materializeEvery)
       i += 1
     }
     labels.select(col("node"), col("lbl").as("community"))

@@ -30,9 +30,25 @@ private[operators] final class Scratch(spark: SparkSession, caller: String,
     val p = new org.apache.hadoop.fs.Path(tmp + "/" + name)
     p.getFileSystem(hadoopConf).delete(p, true)
   }
+
+  private var lastSnapshot: Option[String] = None
+
+  /** Round `i` of an `iters`-round loop: every `materializeEvery`-th
+    * round, and always the last, writes `df` as `name` and then drops
+    * the previous snapshot, which the new one replaces; other rounds
+    * return `df` as is. A drop never removes a snapshot the live
+    * lineage still reads. */
+  def snapshot(df: DataFrame, name: String, i: Int, iters: Int,
+               materializeEvery: Int): DataFrame =
+    if ((i + 1) % materializeEvery == 0 || i == iters - 1) {
+      val m = materialize(df, name)
+      lastSnapshot.foreach(drop)
+      lastSnapshot = Some(name)
+      m
+    } else df
 }
 
-private[operators] object Scratch {
+private[graft] object Scratch {
   /** The cluster-safety gate, factored out so the non-local branch is
     * unit-testable off-cluster; `caller` names the operator in the
     * error so the message points at what the user actually invoked. */

@@ -807,7 +807,13 @@ object WindowOps {
     * for |x·y| < 1e19), doubles only at the final combination — two
     * engines mirroring the tree agree bit-for-bit. Rows where either
     * side is NULL are excluded PAIRWISE (conditional sums), and windows
-    * with n < 2 or a zero-variance side yield NULL, never ±Inf/NaN. */
+    * with n < 2 or a zero-variance side yield NULL, never ±Inf/NaN.
+    *
+    * Bounds: |x|, |y| < 1e14 (DECIMAL(18,4)) and |x²|, |y²|, |x·y| < 1e19
+    * (DECIMAL(27,8)). With ANSI off an overflowing cast is NULL, which
+    * would drop that row's term from its sum while n still counts it; a
+    * seventh running count over the same frames tracks such rows (and
+    * NaN/±Inf inputs), and any window holding one yields NULL. */
   def rollingCorr(df: DataFrame, partitionBy: Seq[String],
                   orderBy: Seq[String], xCol: String, yCol: String,
                   window: Int, outCol: String = "corr"): DataFrame = {
@@ -837,11 +843,13 @@ object WindowOps {
     val both = col(xCol).isNotNull && col(yCol).isNotNull
     val x = when(both, col(xCol).cast("double"))
     val y = when(both, col(yCol).cast("double"))
-    val terms = Seq(
-      "n" -> when(both, 1L).otherwise(0L).cast("long"),
+    val moments = Seq(
       "sx" -> x.cast(dec18), "sy" -> y.cast(dec18),
       "sxx" -> (x * x).cast(dec27), "syy" -> (y * y).cast(dec27),
       "sxy" -> (x * y).cast(dec27))
+    val overflow = both && moments.map(_._2.isNull).reduce(_ || _)
+    val terms = ("n" -> when(both, 1L).otherwise(0L).cast("long")) +:
+      ("ov" -> when(overflow, 1L).otherwise(0L).cast("long")) +: moments
     val withCum = df.select(col("*") +: terms.map { case (nm, t) =>
       sum(t).over(wCum).as(s"__rc_$nm") }: _*)
     def roll(nm: String): Column = {
@@ -849,6 +857,7 @@ object WindowOps {
       cum - coalesce(lag(cum, window).over(wOrd), lit(0))
     }
     val n = roll("n")
+    val ov = roll("ov")
     val sx = roll("sx").cast("double")
     val sy = roll("sy").cast("double")
     val sxx = roll("sxx").cast("double")
@@ -858,7 +867,7 @@ object WindowOps {
     val vx = n * sxx - sx * sx
     val vy = n * syy - sy * sy
     withCum.withColumn(outCol,
-        when(n >= 2 && vx > 0 && vy > 0, cov / sqrt(vx * vy)))
+        when(n >= 2 && ov === 0 && vx > 0 && vy > 0, cov / sqrt(vx * vy)))
       .drop(terms.map { case (nm, _) => s"__rc_$nm" }: _*)
   }
 

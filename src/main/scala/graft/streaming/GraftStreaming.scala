@@ -23,7 +23,7 @@ object GraftStreaming {
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** THE ts-vintage seam, shared by batch (SparkEntry.table) and
+  /** THE ts-vintage seam, shared by batch (queries.Glue.table) and
     * streaming ([[normalizeTs]]): a TIMESTAMP/TIMESTAMP_NTZ `ts` becomes
     * epoch-ns `unix_micros * 1000` (UTC session, so the NTZ→instant cast
     * is the identity and matches DuckDB's epoch_us/epoch_ns on the same

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract key parity: every `SparkEntry.queries` entry must
-  * have an `oracleSql` twin and vice versa — a missing oracle silently
-  * downgrades a query to the driver's weaker rows-only check, and an
-  * orphaned oracle is dead SQL nobody validates. The judge re-verified
-  * this by hand in rounds 8-9; this spec makes it a suite failure. */
+/** Driver-contract registry shape: each query is one `Q` record, so a
+  * builder cannot lack its oracle SQL. The key-parity test guards the
+  * `SparkEntry.queries`/`oracleSql` views against drifting apart (a
+  * missing oracle silently downgrades a query to the rows-only check).
+  * What can also go wrong is a name declared twice across the family
+  * registries, which those name-keyed views would silently collapse to
+  * one entry. */
 class ContractParitySpec extends AnyFunSuite {
 
   test("queries and oracleSql cover exactly the same keys") {
@@ -18,6 +20,15 @@ class ContractParitySpec extends AnyFunSuite {
       s"queries with NO oracle (rows-only check): ${noOracle.toSeq.sorted}")
     assert(orphaned.isEmpty,
       s"oracles with no query: ${orphaned.toSeq.sorted}")
+  }
+
+  test("each of the 334 query names is declared exactly once across the family registries") {
+    val names = SparkEntry.all.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
+    assert(dups.isEmpty, s"names declared more than once: ${dups.toSeq.sorted}")
+    assert(names.size == 334, s"${names.size} query records, expected 334")
+    assert(SparkEntry.queries.size == names.size &&
+      SparkEntry.oracleSql.size == names.size)
   }
 
   test("every query name is a well-formed q_* slug") {

@@ -160,12 +160,15 @@ class DedupScaleSpec extends AnyFunSuite {
 
   test("duplicateClusters fails fast on a non-local master without scratchDir") {
     val e = intercept[IllegalArgumentException] {
-      Dedup.requireClusterSafeScratch(isLocal = false, scratchDir = None)
+      Scratch.requireClusterSafe(isLocal = false, scratchDir = None,
+        "duplicateClusters")
     }
     assert(e.getMessage.contains("shared filesystem"))
     // explicit scratch or local mode both pass
-    Dedup.requireClusterSafeScratch(isLocal = false, scratchDir = Some("/shared"))
-    Dedup.requireClusterSafeScratch(isLocal = true, scratchDir = None)
+    Scratch.requireClusterSafe(isLocal = false, scratchDir = Some("/shared"),
+      "duplicateClusters")
+    Scratch.requireClusterSafe(isLocal = true, scratchDir = None,
+      "duplicateClusters")
   }
 
   test("duplicateClusters cleans its scratch down to the final iteration") {

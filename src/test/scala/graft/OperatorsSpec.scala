@@ -2889,7 +2889,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("IVF-PQ index persists its codebook: a TRAINED index round-trips build → probe") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val centers = typedlit(graft.SparkEntry.PqClusterCenters)
+    val centers = typedlit(graft.queries.SimilarityQueries.PqClusterCenters)
     val ce = emb.select(col("vec_id"),
       transform(sequence(lit(1), lit(64)), i =>
         element_at(element_at(centers, (col("vec_id") % 16).cast("int") + 1), i) +
@@ -2922,7 +2922,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("ivfPqTopKRefined: exact re-rank never loses to raw ADC; raw-vector fetch is candidate-bounded and broadcast") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val centers = typedlit(graft.SparkEntry.PqClusterCenters)
+    val centers = typedlit(graft.queries.SimilarityQueries.PqClusterCenters)
     val ce = emb.select(col("vec_id"),
       transform(sequence(lit(1), lit(64)), i =>
         element_at(element_at(centers, (col("vec_id") % 16).cast("int") + 1), i) +
@@ -2977,7 +2977,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("trainPqCodebooks: partition-invariant, shrinks quantization distortion vs seed planes, feeds the same ADC chain") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val centers = typedlit(graft.SparkEntry.PqClusterCenters)
+    val centers = typedlit(graft.queries.SimilarityQueries.PqClusterCenters)
     val ce = emb.select(col("vec_id"),
       transform(sequence(lit(1), lit(64)), i =>
         element_at(element_at(centers, (col("vec_id") % 16).cast("int") + 1), i) +
@@ -3024,7 +3024,7 @@ class OperatorsSpec extends AnyFunSuite {
     // zero ADC discrimination); pin that the synthesized clusters
     // actually spread the codes, or the recall contract tests nothing
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val centers = typedlit(graft.SparkEntry.PqClusterCenters)
+    val centers = typedlit(graft.queries.SimilarityQueries.PqClusterCenters)
     val ce = emb.select(col("vec_id"),
       transform(sequence(lit(1), lit(64)), i =>
         element_at(element_at(centers, (col("vec_id") % 16).cast("int") + 1), i) +

@@ -377,4 +377,51 @@ class TemporalPropSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("rollingCorr is NULL over a window holding a term past its decimal bound") {
+    // x² crosses DECIMAL(27,8)'s 1e19 between these two values
+    // (√1e19 ≈ 3.16227766017e9). Past it the non-ANSI cast is NULL; the
+    // window must go NULL, not silently drop the term while n counts it.
+    val below = 3.1622776601e9
+    val at = 3.1622776602e9
+    assert(below * below < 1e19 && at * at >= 1e19)
+    val win = 4
+    def d4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+    def d8(x: Double) = BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP)
+    def pearson(w: Seq[(Double, Double)]): Option[Double] = {
+      val n = w.size.toDouble
+      val sx = w.map(r => d4(r._1)).sum.toDouble
+      val sy = w.map(r => d4(r._2)).sum.toDouble
+      val sxx = w.map(r => d8(r._1 * r._1)).sum.toDouble
+      val syy = w.map(r => d8(r._2 * r._2)).sum.toDouble
+      val sxy = w.map(r => d8(r._1 * r._2)).sum.toDouble
+      val vx = n * sxx - sx * sx
+      val vy = n * syy - sy * sy
+      if (w.size >= 2 && vx > 0 && vy > 0)
+        Some((n * sxy - sx * sy) / math.sqrt(vx * vy)) else None
+    }
+    // the spread of the other x values keeps n·Σx² − (Σx)² positive when
+    // the big row's square drops out, so a dropped term reads finite
+    def series(big: Double) = Seq(-3e9 -> 1.0, 3e9 -> 2.0, 3e9 -> 3.0,
+      big -> 4.0, 1.0 -> 5.0, 2.0 -> 7.0, 3.0 -> 6.0, 4.0 -> 9.0)
+    val rows = Seq(1L -> below, 2L -> at).flatMap { case (k, big) =>
+      series(big).zipWithIndex.map { case ((x, y), t) => (k, t.toLong, x, y) } }
+    val got = WindowOps.rollingCorr(rows.toDF("k", "t", "x", "y"),
+        Seq("k"), Seq("t"), "x", "y", win)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (if (r.isNullAt(r.fieldIndex("corr"))) None
+         else Some(r.getDouble(r.fieldIndex("corr"))))).toMap
+    for (k <- Seq(1L, 2L); t <- 0 until 8) {
+      val w = series(if (k == 1L) below else at)
+        .slice(math.max(0, t - win + 1), t + 1)
+      val expect = if (w.exists(_._1 == at)) None else pearson(w)
+      val g = got((k, t.toLong))
+      assert(g.isDefined == expect.isDefined, s"corr null k=$k t=$t got=$g")
+      g.zip(expect).foreach { case (a, b) =>
+        assert(math.abs(a - b) < 1e-9, s"corr k=$k t=$t got=$a want=$b") }
+    }
+    // the windows that hold the big row: finite below the bound, NULL at it
+    assert((3L to 6L).forall(t => got((1L, t)).isDefined))
+    assert((3L to 6L).forall(t => got((2L, t)).isEmpty))
+  }
 }
