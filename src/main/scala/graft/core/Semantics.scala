@@ -9,11 +9,6 @@ import org.apache.spark.sql.types._
   * `value.type.python_type` introspection, coercion.py:19-22). */
 final case class Operand(col: Column, dt: DataType) {
   def isBool: Boolean = dt == BooleanType
-  def isNumeric: Boolean = dt match {
-    case _: NumericType | BooleanType => true
-    case NullType => true // NULL operand participates in numeric ops
-    case _ => false
-  }
 }
 
 /** The numpy-IEEE-on-SQL semantics layer — the Spark re-expression of the

@@ -55,7 +55,6 @@ final class SqlFrame private (
   def colAt(i: Int): Column =
     if (i < 0) lit(null) else col(SqlFrame.colName(i))
 
-  def idxType(i: Int): DataType = schema(SqlFrame.idxName(i)).dataType
   def colType(i: Int): DataType =
     if (i < 0) NullType else schema(SqlFrame.colName(i)).dataType
 

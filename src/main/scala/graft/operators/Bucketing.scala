@@ -139,14 +139,24 @@ object Bucketing {
     val bucketCols = spec.bucketColumnNames
     val sortCols = spec.sortColumnNames
     val df = transform(spark.read.parquet(meta.location.toString))
+    swapIn(spark, table) { shadow =>
+      val writer = df
+        .repartition(spec.numBuckets, bucketCols.map(col): _*)
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(spec.numBuckets, bucketCols.head, bucketCols.tail: _*)
+      (if (sortCols.nonEmpty) writer.sortBy(sortCols.head, sortCols.tail: _*)
+       else writer).saveAsTable(shadow)
+    }
+  }
+
+  /** The catalog steps of every self-read-safe table rewrite: clear the
+    * shadow `table__rw` (a crashed predecessor's leftover), `write` the
+    * new rows to it, drop the live table, rename the shadow to it. */
+  private[operators] def swapIn(spark: SparkSession, table: String)
+                               (write: String => Unit): Unit = {
     val shadow = table + "__rw"
-    dropForRewrite(spark, shadow) // clear a crashed predecessor's leftover
-    val writer = df
-      .repartition(spec.numBuckets, bucketCols.map(col): _*)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(spec.numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) writer.sortBy(sortCols.head, sortCols.tail: _*)
-     else writer).saveAsTable(shadow)
+    dropForRewrite(spark, shadow)
+    write(shadow)
     dropForRewrite(spark, table)
     spark.sql(s"ALTER TABLE $shadow RENAME TO $table")
   }

@@ -34,9 +34,9 @@ object Dedup {
     * plan would otherwise double per round) and — unlike `localCheckpoint`
     * — holds NO block-manager memory after the call returns: an earlier
     * build leaked the checkpointed RDD blocks of every iteration into the
-    * long-lived session. Scratch files live under java.io.tmpdir and are
-    * removed on JVM exit; at cluster scale this is the standard
-    * iterate-via-storage shape (each round's state is a small
+    * long-lived session. Scratch files live in Spark's managed temp dir,
+    * which Spark deletes at JVM shutdown; at cluster scale this is the
+    * standard iterate-via-storage shape (each round's state is a small
     * (node, label) table, not the corpus).
     *
     * Returns (node, label) where label = min node id in the component.
@@ -48,7 +48,7 @@ object Dedup {
     * silently see partial state (wrong cluster labels), so a cluster run
     * without an explicit shared-filesystem scratchDir (HDFS/S3/NFS) fails
     * fast instead. Iteration i−1's parquet is deleted as soon as
-    * iteration i is materialized and counted, so at most two iteration
+    * iteration i is materialized, so at most two iteration
     * snapshots (plus the edge list) exist at any moment and nothing but
     * the final labels outlives the call — a long-lived session running
     * many dedup passes would otherwise accumulate scratch until JVM
@@ -60,6 +60,7 @@ object Dedup {
     val scratch = new Scratch(spark, "duplicateClusters", "graft-cc",
       scratchDir)
     import scratch.{materialize, drop}
+    val loop = scratch.loop(maxIter, 1)
     val edges = materialize(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -78,11 +79,10 @@ object Dedup {
         .select(col("dst").as("node"), col("label"))
       val next = labels.union(nbrLabels).groupBy("node")
         .agg(min("label").as("next_label"))
-      val merged = materialize(labels.join(next, "node"), s"iter$i")
+      // step drops iteration i−1 once iteration i is on disk: the
+      // count and the next labels read iteration i only
+      val merged = loop.step(labels.join(next, "node"), s"iter$i", i)
       changed = merged.where(col("next_label") < col("label")).count()
-      // iteration i is on disk and counted — everything before it is
-      // dead state (labels now reads iter i only)
-      if (i > 0) drop(s"iter${i - 1}")
       labels = merged.select(col("node"), col("next_label").as("label"))
       i += 1
     }

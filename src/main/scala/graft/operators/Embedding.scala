@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * relation against the two VOCAB-SIZED embedding matrices pivoted to
   * array form (broadcast when vocab fits — the common case; keyed
   * shuffle otherwise), the per-pair score folded IN-ROW over the dim
-  * axis (exact decimal — no per-pair key, no join-back), and two
-  * gradient aggregates, with both matrices snapshotting per round
-  * ([[GraphOps.pageRankNano]]'s lineage discipline). Nothing is
+  * axis (exact decimal — no per-pair key, no join-back), and one
+  * (side, node, pos) gradient aggregate; both matrices live in one
+  * long-form relation that snapshots every `materializeEvery` rounds
+  * ([[Scratch.Loop]], the graph loops' lineage discipline). Nothing is
   * driver-resident: a 10M-node vocabulary trains the same plan.
   */
 object Embedding {
@@ -377,8 +378,7 @@ object Embedding {
                       initIn: Option[DataFrame] = None,
                       initOut: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     checkFitArgs(dim, iters, materializeEvery)
-    val scratch = prep.scratch
-    import scratch.{materialize, drop}
+    val loop = prep.scratch.loop(iters, materializeEvery)
     val train = prep.train
     val nodes = prep.nodes
     val n = prep.n
@@ -414,9 +414,15 @@ object Embedding {
           .select(col("node"), col("pos"),
             coalesce(col("__iv"), col("v")).as("v"))
       }
-    var vin = withInit("in", initIn)
-    var vout = withInit("out", initOut)
-    var lastSnap = Option.empty[Int]
+    // both matrices as ONE long-form (__side, node, pos, v) relation,
+    // side 0 = center (in), 1 = context (out): keyed like the gradient
+    // aggregate, so one join updates both and one snapshot holds both
+    def tagged(s: Int, m: DataFrame): DataFrame =
+      m.select(lit(s).as("__side"), col("node"), col("pos"), col("v"))
+    var mats = tagged(0, withInit("in", initIn))
+      .unionByName(tagged(1, withInit("out", initOut)))
+    def side(s: Int): DataFrame = mats.where(col("__side") === s)
+      .select(col("node"), col("pos"), col("v"))
     val pendingScopes =
       scala.collection.mutable.ArrayBuffer.empty[CacheScope]
 
@@ -427,8 +433,8 @@ object Embedding {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("v")))),
           s => s.getField("v")).as(out))
 
-    var k = 1
-    while (k <= iters) {
+    var i = 0
+    while (i < iters) {
       // per-pair score IN-ROW: both embedding vectors attach as arrays
       // (two vocab-sized joins), z folds over the dim axis as exact
       // DECIMAL(38,18) — the identical product/cast/sum terms the old
@@ -443,8 +449,8 @@ object Embedding {
         zip_with(col("__va"), col("__vb"), (a, b) => (a * b).cast(dec)),
         lit(0).cast(dec), (acc, t) => (acc + t).cast(dec)).cast("double")
       val contrib = train
-        .join(toArr(vin, "__c", "__va"), Seq("__c"))
-        .join(toArr(vout, "__x", "__vb"), Seq("__x"))
+        .join(toArr(side(0), "__c", "__va"), Seq("__c"))
+        .join(toArr(side(1), "__x", "__vb"), Seq("__x"))
         .select(col("__c"), col("__x"),
           (lit(1.0) / (lit(1.0) + exp(-z)) - col("__y")).as("__g"),
           posexplode(arrays_zip(col("__va"), col("__vb")))
@@ -474,42 +480,23 @@ object Embedding {
       val grads = iterScope.cache(
         sided.groupBy("__side", "node", "pos")
           .agg(sum(col("__t")).cast("double").as("__gr")))
-      def side(s: Int): DataFrame = grads.where(col("__side") === s)
-        .select(col("node"), col("pos"), col("__gr"))
-      val vinU = vin.join(side(0), Seq("node", "pos"), "left")
-        .select(col("node"), col("pos"),
-          q9(col("v") - lit(lr) * coalesce(col("__gr"), lit(0.0)) / n)
-            .as("v"))
-      val voutU = vout.join(side(1), Seq("node", "pos"), "left")
-        .select(col("node"), col("pos"),
+      val updated = mats.join(grads, Seq("__side", "node", "pos"), "left")
+        .select(col("__side"), col("node"), col("pos"),
           q9(col("v") - lit(lr) * coalesce(col("__gr"), lit(0.0)) / n)
             .as("v"))
       pendingScopes += iterScope
-      if (k % materializeEvery == 0 || k == iters) {
-        vin = materialize(vinU, s"f${fid}_vin$k")
-        vout = materialize(voutU, s"f${fid}_vout$k")
-        lastSnap.foreach { p => drop(s"f${fid}_vin$p"); drop(s"f${fid}_vout$p") }
-        lastSnap = Some(k)
-        // the snapshot's writes were the actions all open scopes were
-        // held for; the parquet re-read cuts the lineage, so every
-        // cached subtree (this round's gradient cache and the lazy
-        // rounds' since the last snapshot) is now dead weight
+      mats = loop.step(updated, s"f${fid}_m$i", i)
+      if (loop.due(i)) {
+        // the snapshot's write was the action every open scope (this
+        // round's and the lazy rounds' since the last snapshot) was held
+        // for; the re-read cuts the lineage, so they are dead weight.
+        // The last round is always due: no scope outlives the loop
         pendingScopes.foreach(_.close())
         pendingScopes.clear()
-      } else {
-        // lazy round: vin/vout stay the cheap vocab-sized join over the
-        // cached gradients — no matrix-level cache needed once the
-        // corpus pass behind them is cached (the scope stays open in
-        // pendingScopes until the next snapshot's writes land)
-        vin = vinU
-        vout = voutU
       }
-      k += 1
+      i += 1
     }
-    pendingScopes.foreach(_.close())
-    pendingScopes.clear()
-    (vin.select(col("node"), col("pos"), col("v")),
-      vout.select(col("node"), col("pos"), col("v")))
+    (side(0), side(1))
   }
 
   /** [[sgnsFit]] as DuckDB CTEs over a CTE `pairs(a, b)` (positives,

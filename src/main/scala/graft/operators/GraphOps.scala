@@ -84,12 +84,12 @@ object GraphOps {
                    seeds: Option[DataFrame] = None,
                    materializeEvery: Int = 1): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    require(materializeEvery >= 1, "materializeEvery must be >= 1")
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping $dampNum/$dampDen must be a fraction in [0, 1]")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "pageRankNano", "graft-pr", scratchDir)
-    import scratch.{materialize, snapshot}
+    import scratch.materialize
+    val loop = scratch.loop(iters, materializeEvery)
 
     // one pass: collapse parallel edges, drop self-loops, attach total
     // out-weight — the loop input, so it is materialized once instead of
@@ -175,7 +175,7 @@ object GraphOps {
               (CASE WHEN is_seed = 1 AND __ns > 0
                 THEN __dang DIV __ns ELSE 0L END)) DIV $dampDen"""))
             .as("r"))
-      ranks = snapshot(next, s"iter$i", i, iters, materializeEvery)
+      ranks = loop.step(next, s"iter$i", i)
       i += 1
     }
     ranks.select(col("node"), col("r").as("rank_nano"))
@@ -286,10 +286,10 @@ object GraphOps {
                scratchDir: Option[String] = None,
                materializeEvery: Int = 1): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    require(materializeEvery >= 1, "materializeEvery must be >= 1")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "hitsNano", "graft-hits", scratchDir)
-    import scratch.{materialize, snapshot}
+    import scratch.materialize
+    val loop = scratch.loop(iters, materializeEvery)
     val ew = materialize(edges
       .where(col(srcCol) =!= col(dstCol))
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -323,7 +323,7 @@ object GraphOps {
         .select(col("src").as("node"), expr("a * w").as("c"))
         .groupBy("node").agg(sum("c").as("raw"))
       val hubDf = normalize(rawH, "h")
-      hub = snapshot(hubDf, s"hub$i", i, iters, materializeEvery)
+      hub = loop.step(hubDf, s"hub$i", i)
       i += 1
     }
     nodes
@@ -389,10 +389,10 @@ object GraphOps {
                        scratchDir: Option[String] = None,
                        materializeEvery: Int = 1): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    require(materializeEvery >= 1, "materializeEvery must be >= 1")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "labelPropagation", "graft-lpa", scratchDir)
-    import scratch.{materialize, snapshot}
+    import scratch.materialize
+    val loop = scratch.loop(iters, materializeEvery)
     import org.apache.spark.sql.expressions.Window
     val dir0 = edges.where(col(srcCol) =!= col(dstCol))
       .select(col(srcCol).as("node"), col(dstCol).as("nbr"),
@@ -412,7 +412,7 @@ object GraphOps {
         .withColumn("__rn", row_number().over(win))
         .where(col("__rn") === 1)
         .select(col("node"), col("lbl"))
-      labels = snapshot(next, s"lbl$i", i, iters, materializeEvery)
+      labels = loop.step(next, s"lbl$i", i)
       i += 1
     }
     labels.select(col("node"), col("lbl").as("community"))
@@ -530,28 +530,28 @@ object GraphOps {
     require(rounds >= 1, "rounds must be >= 1")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "kCore", "graft-kcore", scratchDir)
-    import scratch.{materialize, drop}
+    import scratch.materialize
+    val loop = scratch.loop(rounds, 1)
     val und = materialize(edges.where(col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct(), "und")
     var active = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node"))).distinct()
-    var lastDeg: DataFrame = null
+    var deg: DataFrame = null
     var i = 0
     while (i < rounds) {
       val er = und
         .join(active.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(active.select(col("node").as("b")), Seq("b"), "left_semi")
-      lastDeg = materialize(
+      deg = loop.step(
         er.select(col("a").as("node")).union(er.select(col("b").as("node")))
           .groupBy("node").agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= k), s"core$i")
-      if (i > 0) drop(s"core${i - 1}")
-      active = lastDeg.select("node")
+          .where(col("deg") >= k), s"core$i", i)
+      active = deg.select("node")
       i += 1
     }
-    lastDeg.select(col("node"), col("deg"))
+    deg.select(col("node"), col("deg"))
   }
 
   /** Co-visitation projection of a bipartite (key, item) relation onto
@@ -724,10 +724,10 @@ object GraphOps {
                          materializeEvery: Int = 1): DataFrame = {
     require(steps >= 1, "steps must be >= 1")
     require(walksPerNode >= 1, "walksPerNode must be >= 1")
-    require(materializeEvery >= 1, "materializeEvery must be >= 1")
     val spark = edges.sparkSession
     val scratch = new Scratch(spark, "deterministicWalks", "graft-walks", scratchDir)
     import scratch.materialize
+    val loop = scratch.loop(steps, materializeEvery)
     val e = materialize(edges.where(col(srcCol) =!= col(dstCol))
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .distinct(), "edges")
@@ -754,10 +754,9 @@ object GraphOps {
           col("__dst").as("d")).as("__c"))
         .groupBy("walk_id").agg(min(col("__c")).as("__m"))
         .select(col("walk_id"), col("__m.d").as("node"))
-      state =
-        if (t % materializeEvery == 0 || t == steps)
-          materialize(next, s"w$t")
-        else next
+      // `due` only, never `step`: the final union reads EVERY step's
+      // state, so no snapshot may be dropped while the result lives
+      state = if (loop.due(t - 1)) materialize(next, s"w$t") else next
       outs += state.select(col("walk_id"), lit(t).as("step"), col("node"))
       t += 1
     }

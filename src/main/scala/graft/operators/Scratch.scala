@@ -4,14 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Managed scratch-parquet state — ONE implementation of the
   * materialize-through-scratch discipline every operator that must cut
-  * lineage mid-computation shares (iterative loops: pageRankNano /
-  * hitsNano / deterministicWalks; self-read rewrites: compactBucketed,
-  * appendToBm25Index; connected components: duplicateClusters):
-  * snapshot to parquet, read back, delete superseded snapshots. The
-  * default directory is Spark's shutdown-deleted temp dir — valid ONLY
-  * on a local master, which the caller-named guard enforces (a
-  * driver-local path on a real cluster would make executors commit
-  * state to their own disks and silently corrupt it). */
+  * lineage mid-computation shares (the iterative loops of GraphOps,
+  * Embedding and duplicateClusters, appendToBm25Index's batch
+  * postings): snapshot to parquet, read back, delete superseded
+  * snapshots ([[Loop]]). The default directory is Spark's
+  * shutdown-deleted temp dir — valid ONLY on a local master, which the
+  * caller-named guard enforces (a driver-local path on a real cluster
+  * would make executors commit state to their own disks and silently
+  * corrupt it). */
 private[operators] final class Scratch(spark: SparkSession, caller: String,
                                        prefix: String,
                                        scratchDir: Option[String]) {
@@ -31,21 +31,31 @@ private[operators] final class Scratch(spark: SparkSession, caller: String,
     p.getFileSystem(hadoopConf).delete(p, true)
   }
 
-  private var lastSnapshot: Option[String] = None
+  def loop(rounds: Int, materializeEvery: Int): Loop =
+    new Loop(rounds, materializeEvery)
 
-  /** Round `i` of an `iters`-round loop: every `materializeEvery`-th
-    * round, and always the last, writes `df` as `name` and then drops
-    * the previous snapshot, which the new one replaces; other rounds
-    * return `df` as is. A drop never removes a snapshot the live
-    * lineage still reads. */
-  def snapshot(df: DataFrame, name: String, i: Int, iters: Int,
-               materializeEvery: Int): DataFrame =
-    if ((i + 1) % materializeEvery == 0 || i == iters - 1) {
-      val m = materialize(df, name)
-      lastSnapshot.foreach(drop)
-      lastSnapshot = Some(name)
-      m
-    } else df
+  /** Every `materializeEvery`-th round, and always the last, is due:
+    * [[step]] writes its state as a snapshot and drops THIS loop's
+    * previous one, which the new one replaces; other rounds return the
+    * state as is. The rotation is per loop, not per [[Scratch]], so two
+    * loops sharing a scratch dir (consecutive warm-start SGNS fits)
+    * never drop each other's snapshots, and a drop never removes a
+    * snapshot the live lineage still reads. */
+  final class Loop private[Scratch] (rounds: Int, materializeEvery: Int) {
+    require(materializeEvery >= 1, "materializeEvery must be >= 1")
+    private var last = Option.empty[String]
+
+    def due(i: Int): Boolean =
+      (i + 1) % materializeEvery == 0 || i == rounds - 1
+
+    def step(df: DataFrame, name: String, i: Int): DataFrame =
+      if (due(i)) {
+        val m = materialize(df, name)
+        last.foreach(drop)
+        last = Some(name)
+        m
+      } else df
+  }
 }
 
 private[graft] object Scratch {

@@ -454,10 +454,7 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, qidCol: String, qvecCol: String,
               k: Int, nlist: Int = 256, nprobe: Int = 8): DataFrame = {
-    val cent = corpus
-      .select(col(idCol).as("__cent_id"), col(vecCol).as("__cent_v"),
-        md5(col(idCol).cast("string")).as("__m"))
-      .orderBy("__m").limit(nlist).drop("__m")
+    val cent = lloydCentroids(corpus, idCol, vecCol, nlist, 0)
     val c = assignClusters(
       corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv")),
       "__cid", "__cv", cent, 1)
@@ -468,6 +465,20 @@ object Similarity {
       .where(col("__cid") =!= col("__qid"))
       .select(col("__qid"), col("__cid"), cosine(col("__cv"), col("__qv")).as("__sim"))
     finishTopK(scored, k)
+  }
+
+  /** IVF coarse centroids as a (__cent_id, __cent_v) table: the `nlist`
+    * corpus rows with the lowest md5(id) as deterministic seeds, then
+    * `lloydIters` collect-free k-means (Lloyd) passes. */
+  private def lloydCentroids(corpus: DataFrame, idCol: String,
+                             vecCol: String, nlist: Int,
+                             lloydIters: Int): DataFrame = {
+    val seeds = corpus
+      .select(col(idCol).as("__cent_id"), col(vecCol).as("__cent_v"),
+        md5(col(idCol).cast("string")).as("__m"))
+      .orderBy("__m").limit(nlist).drop("__m")
+    (0 until lloydIters).foldLeft(seeds) { (cent, _) => centroidVectors(
+      kmeansIterate(corpus, idCol, vecCol, cent, "__cent_id", "__cent_v")) }
   }
 
   /** (centroid_id, pos, mean) long-form [[kmeansIterate]] output pivoted
@@ -510,17 +521,8 @@ object Similarity {
       "payloadCols must not collide with the id/vector/cluster columns")
     val spark = corpus.sparkSession
     Seq(table, s"${table}_centroids").foreach(Bucketing.dropForRewrite(spark, _))
-    var cent: DataFrame = corpus
-      .select(col(idCol).as("__cent_id"), col(vecCol).as("__cent_v"),
-        md5(col(idCol).cast("string")).as("__m"))
-      .orderBy("__m").limit(nlist).drop("__m")
-    var it = 0
-    while (it < lloydIters) {
-      cent = centroidVectors(
-        kmeansIterate(corpus, idCol, vecCol, cent, "__cent_id", "__cent_v"))
-      it += 1
-    }
-    cent.write.mode("overwrite").format("parquet")
+    lloydCentroids(corpus, idCol, vecCol, nlist, lloydIters)
+      .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_centroids")
     val assigned = assignClusters(
       corpus.select(Seq(col(idCol).as("__cid"), col(vecCol).as("__cv")) ++
@@ -823,17 +825,8 @@ object Similarity {
       }
     }.toDF("j", "c", "pos", "v").write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_codebook")
-    var cent: DataFrame = corpus
-      .select(col(idCol).as("__cent_id"), col(vecCol).as("__cent_v"),
-        md5(col(idCol).cast("string")).as("__m"))
-      .orderBy("__m").limit(nlist).drop("__m")
-    var it = 0
-    while (it < lloydIters) {
-      cent = centroidVectors(
-        kmeansIterate(corpus, idCol, vecCol, cent, "__cent_id", "__cent_v"))
-      it += 1
-    }
-    cent.write.mode("overwrite").format("parquet")
+    lloydCentroids(corpus, idCol, vecCol, nlist, lloydIters)
+      .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_centroids")
     val assigned = assignClusters(
       corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv")),

@@ -494,9 +494,9 @@ object TextAnalysis {
                         table: String,
                         scratchDir: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    // the merge materializes through scratch (shared Scratch lifecycle —
-    // same non-local-master guard: a driver-local default would shear
-    // the merged df/stats across executor disks on a real cluster)
+    // the batch postings materialize through scratch (shared Scratch
+    // lifecycle — same non-local-master guard: a driver-local default
+    // would shear them across executor disks on a real cluster)
     val scratch = new Scratch(spark, "appendToBm25Index",
       "graft-bm25-merge", scratchDir)
     // the tokenize explode fuses into the scan — spread a narrow/
@@ -517,9 +517,8 @@ object TextAnalysis {
       bp.select(col("__t"), col("__did"), col("__tf"), col("__len")),
       table, "__t")
     val batchDf = bp.groupBy("__t").agg(count(lit(1)).as("__bdf"))
-    // the merge rewrites tables it also READS — break the self-read
-    // cycle by materializing through scratch parquet (the
-    // duplicateClusters lifecycle), DISTRIBUTED: a 100 TB corpus's
+    // the merge rewrites tables it also READS — the shadow-table swap
+    // below breaks the self-read cycle, DISTRIBUTED: a 100 TB corpus's
     // vocabulary does not fit a driver collect
     val mergedDf = spark.table(s"${table}_df")
       .join(batchDf, Seq("__t"), "full_outer")
@@ -533,15 +532,11 @@ object TextAnalysis {
         (col("__tot") + col("__btot")).as("__tot"))
     // self-read-safe rewrite with ONE data write per side table: the
     // merge plan reads the OLD table while the shadow writes, then a
-    // catalog rename swaps it in (the Bucketing.swapRewrite posture —
-    // the scratch snapshot + second write are gone)
+    // catalog rename swaps it in
     Seq((s"${table}_df", mergedDf), (s"${table}_stats", mergedStats))
       .foreach { case (name, df) =>
-        val shadow = name + "__rw"
-        Bucketing.dropForRewrite(spark, shadow)
-        df.write.mode("overwrite").format("parquet").saveAsTable(shadow)
-        Bucketing.dropForRewrite(spark, name)
-        spark.sql(s"ALTER TABLE $shadow RENAME TO $name")
+        Bucketing.swapIn(spark, name)(
+          df.write.mode("overwrite").format("parquet").saveAsTable(_))
       }
   }
 

@@ -26,6 +26,19 @@ object StreamQueries {
     s.table(out)
   }
 
+  /** The serving-loop twin of [[runStreamQuery]]: drain `qs` through
+    * `probe` one micro-batch at a time ([[GraftStreaming.probeEachBatch]])
+    * into a managed temp dir named by `prefix`, and read the drained
+    * batches back as one frame. */
+  private def runProbeQuery(s: SparkSession, prefix: String, qs: SDF)
+                           (probe: SDF => SDF): SDF = {
+    val out = org.apache.spark.sql.GraftSqlBridge
+      .managedTempDir(prefix).getAbsolutePath
+    val q = GraftStreaming.probeEachBatch(qs, out)(probe)
+    assert(q.awaitTermination(300000), "stream did not finish within 300s")
+    s.read.parquet(out)
+  }
+
   val all: Seq[Q] = Seq(
     // the Bloom novelty gate on a STREAM: the corpus sketch is an
     // eager batch scalar riding the streaming plan as a literal, so the
@@ -60,13 +73,9 @@ object StreamQueries {
         "graft_bm25_srv", buckets = graft.operators.Bucketing.bucketsFor(docs))
       val qs = GraftStreaming.readDocumentsGlob(s, dir, "documents.parquet")
         .where(col("doc_id") < 5).select("doc_id", "text")
-      val out = org.apache.spark.sql.GraftSqlBridge
-        .managedTempDir("graft-bm25-srv").getAbsolutePath
-      val q = GraftStreaming.probeEachBatch(qs, out)(b =>
+      runProbeQuery(s, "graft-bm25-srv", qs)(b =>
         TextAnalysis.bm25AgainstIndex(s, "graft_bm25_srv",
           b, "doc_id", "text", topK = 10))
-      assert(q.awaitTermination(300000), "stream did not finish within 300s")
-      s.read.parquet(out)
         .select(col("query_id"), col("rank"), col("doc_id"),
           TextAnalysis.bm25Micro(col("bm25")).as("bm25"))
         .orderBy("query_id", "rank")
@@ -90,13 +99,9 @@ object StreamQueries {
         "graft_ivf_srv", nlist = 16, buckets = 8)
       val qs = GraftStreaming.readEmbeddingsGlob(s, dir, "embeddings.parquet")
         .where(col("vec_id") >= 30 && col("vec_id") < 40)
-      val out = org.apache.spark.sql.GraftSqlBridge
-        .managedTempDir("graft-ivf-srv").getAbsolutePath
-      val q = GraftStreaming.probeEachBatch(qs, out)(b =>
+      runProbeQuery(s, "graft-ivf-srv", qs)(b =>
         Similarity.ivfTopKIndexed(s, "graft_ivf_srv",
           b, "vec_id", "embedding", k = 5, nprobe = 16))
-      assert(q.awaitTermination(300000), "stream did not finish within 300s")
-      s.read.parquet(out)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           round(col("cosine"), 6).as("cosine"))
         .orderBy("query_id", "rank")
@@ -134,16 +139,12 @@ object StreamQueries {
         "graft_img_srv", dim = 8, buckets = 8)
       val qs = GraftStreaming.readDocumentsGlob(s, dir, "documents.parquet")
         .where(col("doc_id") < 60).select("doc_id", "text")
-      val out = org.apache.spark.sql.GraftSqlBridge
-        .managedTempDir("graft-img-srv").getAbsolutePath
-      val q = GraftStreaming.probeEachBatch(qs, out)(b =>
+      runProbeQuery(s, "graft-img-srv", qs)(b =>
         Multimodal.imageDupAgainstIndex(s, "graft_img_srv",
           Multimodal.withEncodedImagePayload(
             b.select((col("doc_id") + 500000L).as("doc_id"), col("text")),
             "text", "jpeg"),
           "doc_id", "content", dim = 8, maxHamming = 3))
-      assert(q.awaitTermination(300000), "stream did not finish within 300s")
-      s.read.parquet(out)
         .select("corpus_id", "batch_id")
         .orderBy("corpus_id", "batch_id")
     },
@@ -162,9 +163,7 @@ object StreamQueries {
     // as q_audio2
     Q("q_stream_probe", (s, dir) => {
       val qs = GraftStreaming.readDocumentsGlob(s, dir, "documents.parquet")
-      val out = org.apache.spark.sql.GraftSqlBridge
-        .managedTempDir("graft-probe-srv").getAbsolutePath
-      val q = GraftStreaming.probeEachBatch(qs, out)(b =>
+      runProbeQuery(s, "graft-probe-srv", qs)(b =>
         Multimodal.probeAudio(Multimodal.withMp3Payload(b, "text"),
             "content")
           .select(col("doc_id"),
@@ -172,8 +171,6 @@ object StreamQueries {
             col("probed_audio.channels").as("channels"),
             col("probed_audio.n_samples").as("n_samples"),
             col("probed_audio.format").as("format")))
-      assert(q.awaitTermination(300000), "stream did not finish within 300s")
-      s.read.parquet(out)
         .select("doc_id", "sample_rate", "channels", "n_samples", "format")
         .orderBy("doc_id")
     },
