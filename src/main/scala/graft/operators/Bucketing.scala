@@ -67,8 +67,6 @@ object Bucketing {
     loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
   }
 
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
   /** Parquet data-file count under a catalog table's location — the
     * observable [[compactBucketed]] moves (and what a spec pins). */
   def tableFileCount(spark: SparkSession, table: String): Int = {

@@ -777,6 +777,15 @@ object Dedup {
     hammingNearDupFromSig(simhashTable(df, idCol, textCol),
       maxHamming, maxBucketSize)
 
+  /** The 4×16-bit pigeonhole chunking of a 64-bit signature column —
+    * shared by the in-corpus pairing and [[hammingBandRows]] (the
+    * persisted index's build, append and probe): all MUST chunk
+    * identically or candidates are silently lost. */
+  private def shChunks(sh: Column): Column =
+    array((0 until 4).map(c =>
+      struct(lit(c).as("chunk"),
+        shiftright(sh, c * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*)
+
   /** Hamming-ball pairing over ANY 64-bit signature table `(__id, __sh)`
     * — the pigeonhole band join factored out of [[simhashNearDup]] so
     * other 64-bit fingerprints (e.g. the image perceptual dHash,
@@ -786,15 +795,6 @@ object Dedup {
     * verifies. For maxHamming > 3 the pigeonhole bound needs coarser
     * chunks — callers at larger radii accept recall loss (documented at
     * the call sites). Output: (id_l, id_r, hamming ≤ maxHamming). */
-  /** The 4×16-bit pigeonhole chunking of a 64-bit signature column —
-    * shared by the in-corpus pairing, the persisted index build, and
-    * the index probe (all three MUST chunk identically or candidates
-    * are silently lost). */
-  private def shChunks(sh: Column): Column =
-    array((0 until 4).map(c =>
-      struct(lit(c).as("chunk"),
-        shiftright(sh, c * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*)
-
   private[graft] def hammingNearDupFromSig(sig: DataFrame, maxHamming: Int,
       maxBucketSize: Option[Int]): DataFrame = {
     // chunk shift amounts are compile-time literals (shiftright needs Int)
@@ -1568,6 +1568,41 @@ object Dedup {
   private def packedBucket(band: Column, key: Column): Column =
     (band.cast("long") * 4294967296L) + (key.cast("long") + 2147483648L)
 
+  /** A MinHash signature table's `(__bucket, idOut)` band rows — what
+    * [[buildNearDupIndex]] persists and [[nearDupAgainstIndex]] probes
+    * with, so both band identically by construction. */
+  private def minhashBandRows(sig: DataFrame, bands: Int, rows: Int,
+                              idOut: String): DataFrame =
+    bandedBuckets(sig, bands, rows, struct(col("__id")))
+      .select(packedBucket(col("__band"), col("__key")).as("__bucket"),
+        col("__p.__id").as(idOut))
+
+  /** A 64-bit signature table's `(__bucket, idOut)` pigeonhole band rows
+    * ([[shChunks]]) — what [[buildHammingIndex]] and
+    * [[appendToHammingIndex]] persist and [[hammingAgainstIndex]]
+    * probes with. */
+  private def hammingBandRows(sig: DataFrame, idOut: String): DataFrame =
+    sig.select(col("__id").as(idOut),
+        explode(shChunks(col("__sh"))).as("ck"))
+      .select(packedBucket(col("ck.chunk"), col("ck.key")).as("__bucket"),
+        col(idOut))
+
+  /** The sorted 64-bit hashed shingle set of a text — the exact-verify
+    * side [[buildNearDupIndex]] stores and [[nearDupAgainstIndex]]
+    * compares against. */
+  private def hashedShingleSet(text: Column, shingleN: Int): Column =
+    array_sort(transform(shingles(text, shingleN), t => xxhash64(t)))
+
+  /** Distinct (corpus_id, batch_id) candidates: a probe batch's
+    * `(__bucket, __bid)` band rows joined to `{table}_bands` — bucketed
+    * on `__bucket`, so the corpus side reads its files exchange-free. */
+  private def bandCandidates(spark: org.apache.spark.sql.SparkSession,
+                             table: String, probe: DataFrame): DataFrame =
+    spark.table(s"${table}_bands")
+      .join(probe, Seq("__bucket"))
+      .select(col("__id").as("corpus_id"), col("__bid").as("batch_id"))
+      .distinct()
+
   /** Build and PERSIST a MinHash near-dup index over a corpus — the
     * amortization step for INCREMENTAL ingest dedup: [[nearDuplicates]]
     * re-signatures and re-buckets the whole corpus on every call, which
@@ -1593,14 +1628,10 @@ object Dedup {
     Seq(s"${table}_bands", s"${table}_sh")
       .foreach(Bucketing.dropForRewrite(spark, _))
     val sig = minhashSignatures(corpus, idCol, textCol, numHashes, shingleN, seed)
-    val bandRows = bandedBuckets(sig, bands, numHashes / bands,
-      struct(col("__id")))
-      .select(packedBucket(col("__band"), col("__key")).as("__bucket"),
-        col("__p.__id").as("__id"))
-    Bucketing.writeBucketed(bandRows, s"${table}_bands", "__bucket", buckets)
+    Bucketing.writeBucketed(minhashBandRows(sig, bands, numHashes / bands,
+      "__id"), s"${table}_bands", "__bucket", buckets)
     val sh = corpus.select(col(idCol).as("__id"),
-      array_sort(transform(shingles(col(textCol), shingleN),
-        t => xxhash64(t))).as("__sh"))
+      hashedShingleSet(col(textCol), shingleN).as("__sh"))
     Bucketing.writeBucketed(sh, s"${table}_sh", "__id", buckets)
   }
 
@@ -1623,35 +1654,26 @@ object Dedup {
     val spark = sig.sparkSession
     Seq(s"${table}_bands", s"${table}_sig")
       .foreach(Bucketing.dropForRewrite(spark, _))
-    val bands = sig.select(col("__id"),
-        explode(shChunks(col("__sh"))).as("ck"))
-      .select(packedBucket(col("ck.chunk"), col("ck.key")).as("__bucket"),
-        col("__id"))
-    Bucketing.writeBucketed(bands, s"${table}_bands", "__bucket", buckets)
+    Bucketing.writeBucketed(hammingBandRows(sig, "__id"), s"${table}_bands",
+      "__bucket", buckets)
     Bucketing.writeBucketed(sig.select(col("__id"), col("__sh")),
       s"${table}_sig", "__id", buckets)
   }
 
   /** Probe a [[buildHammingIndex]] index with a new batch's signatures:
-    * candidates come from the equi-join of the batch's chunk buckets
-    * against `{table}_bands` (bucketed: corpus side exchange-free),
-    * exact XOR-popcount verification joins the deduplicated candidate
-    * pairs against `{table}_sig` (bucketed by id: again exchange-free)
-    * and the batch's own signatures. Same pigeonhole bound as
+    * the batch's chunk buckets are [[hammingBandRows]], the function
+    * build and append persist the corpus with, and candidates come from
+    * their equi-join against `{table}_bands` ([[bandCandidates]], the
+    * join [[nearDupAgainstIndex]] runs; bucketed: corpus side
+    * exchange-free). Exact XOR-popcount verification joins the
+    * deduplicated candidate pairs against `{table}_sig` (bucketed by id:
+    * again exchange-free) and the batch's own signatures. Same pigeonhole bound as
     * [[hammingNearDupFromSig]]: full recall for hamming ≤ 3. Returns
     * (corpus_id, batch_id, hamming ≤ maxHamming). */
   def hammingAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, batchSig: DataFrame,
                           maxHamming: Int = 3): DataFrame = {
-    val bb = batchSig.select(col("__id").as("__bid"),
-        col("__sh").as("__bsh"),
-        explode(shChunks(col("__sh"))).as("ck"))
-      .select(packedBucket(col("ck.chunk"), col("ck.key")).as("__bucket"),
-        col("__bid"))
-    val cand = spark.table(s"${table}_bands")
-      .join(bb, Seq("__bucket"))
-      .select(col("__id").as("corpus_id"), col("__bid").as("batch_id"))
-      .distinct()
+    val cand = bandCandidates(spark, table, hammingBandRows(batchSig, "__bid"))
     val csig = spark.table(s"${table}_sig")
       .select(col("__id").as("corpus_id"), col("__sh").as("__csh"))
     val bsig = batchSig.select(col("__id").as("batch_id"),
@@ -1668,11 +1690,8 @@ object Dedup {
     * co-partitioning intact, per-doc facts only (nothing global to
     * merge). Caller contract: batch ids are new. */
   def appendToHammingIndex(batchSig: DataFrame, table: String): Unit = {
-    val bands = batchSig.select(col("__id"),
-        explode(shChunks(col("__sh"))).as("ck"))
-      .select(packedBucket(col("ck.chunk"), col("ck.key")).as("__bucket"),
-        col("__id"))
-    Bucketing.appendBucketed(bands, s"${table}_bands", "__bucket")
+    Bucketing.appendBucketed(hammingBandRows(batchSig, "__id"),
+      s"${table}_bands", "__bucket")
     Bucketing.appendBucketed(batchSig.select(col("__id"), col("__sh")),
       s"${table}_sig", "__id")
   }
@@ -1722,17 +1741,10 @@ object Dedup {
                           shingleN: Int = 3, seed: Long = 42L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val bsig = minhashSignatures(batch, idCol, textCol, numHashes, shingleN, seed)
-    val bb = bandedBuckets(bsig, bands, numHashes / bands,
-      struct(col("__id")))
-      .select(packedBucket(col("__band"), col("__key")).as("__bucket"),
-        col("__p.__id").as("__bid"))
-    val cand = spark.table(s"${table}_bands")
-      .join(bb, Seq("__bucket"))
-      .select(col("__id").as("corpus_id"), col("__bid").as("batch_id"))
-      .distinct()
+    val cand = bandCandidates(spark, table,
+      minhashBandRows(bsig, bands, numHashes / bands, "__bid"))
     val bsh = batch.select(col(idCol).as("batch_id"),
-      array_sort(transform(shingles(col(textCol), shingleN),
-        t => xxhash64(t))).as("__bsh"))
+      hashedShingleSet(col(textCol), shingleN).as("__bsh"))
     val csh = spark.table(s"${table}_sh")
       .select(col("__id").as("corpus_id"), col("__sh").as("__csh"))
     cand.join(csh, Seq("corpus_id"))

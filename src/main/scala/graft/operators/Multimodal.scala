@@ -512,50 +512,45 @@ object Multimodal {
       case None => df
     }
 
-  /** Per-partition streaming header probe → metadata struct column parsed
-    * from the payload BYTES (not trusted from upstream metadata). */
-  def probeImages(df0: DataFrame, contentCol: String,
-                  outCol: String = "probed_meta",
-                  minPartitions: Option[Int] = None): DataFrame = {
+  /** The plumbing of every per-row byte kernel: append a nullable
+    * `outCol` of type `outType` holding `codec(payload)` — NULL for a
+    * NULL payload (and wherever `codec` returns null) — to every row of
+    * `df0`, after the [[ensureParallelism]] floor. One kernel instance
+    * per partition; rows flow through an iterator (never materialized
+    * as a whole partition). */
+  private def byteKernel(df0: DataFrame, contentCol: String, outCol: String,
+                         outType: DataType, minPartitions: Option[Int])
+                        (codec: Array[Byte] => Any): DataFrame = {
     val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, imageMetaSchema, nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
+    val idx = df.schema.fieldIndex(contentCol)
+    val enc = RowEncoder.encoderFor(
+      df.schema.add(StructField(outCol, outType, nullable = true)))
     df.mapPartitions { rows =>
       rows.map { r =>
         val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null else {
-          val (w, h, c, f) = ImageCodec.probe(bytes)
-          Row(w, h, c, f)
-        }
-        Row.fromSeq(r.toSeq :+ m)
+        Row.fromSeq(r.toSeq :+ (if (bytes == null) null else codec(bytes)))
       }
     }(enc)
   }
 
-  /** Per-partition streaming decode → fixed-dim feature vector column.
-    * One kernel instance per partition; rows flow through an iterator
-    * (never materialized as a whole partition). */
+  /** Per-partition streaming header probe → metadata struct column parsed
+    * from the payload BYTES (not trusted from upstream metadata). */
+  def probeImages(df0: DataFrame, contentCol: String,
+                  outCol: String = "probed_meta",
+                  minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol, imageMetaSchema, minPartitions) { bytes =>
+      val (w, h, c, f) = ImageCodec.probe(bytes)
+      Row(w, h, c, f)
+    }
+
+  /** Per-partition streaming decode → fixed-dim feature vector column. */
   def decodeImages(df0: DataFrame, contentCol: String, dim: Int = 16,
                    outCol: String = "features",
-                   minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol,
-      ArrayType(FloatType, containsNull = false), nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      // per-partition decoder init would go here (codec handles, buffers)
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val feats = if (bytes == null) null
-        else ImageCodec.features(bytes, dim).toSeq
-        Row.fromSeq(r.toSeq :+ feats)
-      }
-    }(enc)
-  }
+                   minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol,
+      ArrayType(FloatType, containsNull = false), minPartitions) { bytes =>
+      ImageCodec.features(bytes, dim).toSeq
+    }
 
   /** Perceptual difference-hash over a decoded dim×dim luma grid
     * ([[decodeImages]] output): bit (r, c) = 1 iff grid(r, c+1) >
@@ -1042,47 +1037,23 @@ object Multimodal {
     * fields. */
   def audioTags(df0: DataFrame, contentCol: String,
                 outCol: String = "tags",
-                minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, tagsSchema,
-      nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null
-        else AudioCodec.id3Tags(bytes) match {
-          case Some((t, a, al)) => Row(t.orNull, a.orNull, al.orNull)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
+                minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol, tagsSchema, minPartitions) { bytes =>
+      AudioCodec.id3Tags(bytes) match {
+        case Some((t, a, al)) => Row(t.orNull, a.orNull, al.orNull)
+        case None => null
       }
-    }(enc)
-  }
+    }
 
   /** Per-partition streaming WAV probe → metadata struct parsed from the
     * payload BYTES (not trusted from upstream metadata). */
   def probeAudio(df0: DataFrame, contentCol: String,
                  outCol: String = "probed_audio",
-                 minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, audioMetaSchema, nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null else {
-          val (rate, ch, bits, n, f) = AudioCodec.probe(bytes)
-          Row(rate, ch, bits, n, f)
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
-    }(enc)
-  }
+                 minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol, audioMetaSchema, minPartitions) { bytes =>
+      val (rate, ch, bits, n, f) = AudioCodec.probe(bytes)
+      Row(rate, ch, bits, n, f)
+    }
 
   /** metadata struct carried next to every video payload */
   val videoMetaSchema: StructType = StructType(Seq(
@@ -1503,25 +1474,13 @@ object Multimodal {
     * as [[probeVideo]]. */
   def videoFrameStats(df0: DataFrame, contentCol: String,
                       outCol: String = "frame_stats",
-                      minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, frameStatsSchema,
-      nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null
-        else VideoCodec.frameDeltas(bytes) match {
-          case Some((n, tot, mx)) => Row(n, tot, mx)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
+                      minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol, frameStatsSchema, minPartitions) { bytes =>
+      VideoCodec.frameDeltas(bytes) match {
+        case Some((n, tot, mx)) => Row(n, tot, mx)
+        case None => null
       }
-    }(enc)
-  }
+    }
 
   private def be32Hex(c: Column): Column = lpad(hex(c), 8, "0")
   private def be16Hex(c: Column): Column = lpad(hex(c), 4, "0")
@@ -1627,23 +1586,11 @@ object Multimodal {
     * frame-counted from the payload BYTES. */
   def probeVideo(df0: DataFrame, contentCol: String,
                  outCol: String = "probed_video",
-                 minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, videoMetaSchema, nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null else {
-          val (w, h, fn, fd, n, f) = VideoCodec.probe(bytes)
-          Row(w, h, fn, fd, n, f)
-        }
-        Row.fromSeq(r.toSeq :+ m)
-      }
-    }(enc)
-  }
+                 minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol, videoMetaSchema, minPartitions) { bytes =>
+      val (w, h, fn, fd, n, f) = VideoCodec.probe(bytes)
+      Row(w, h, fn, fd, n, f)
+    }
 
   /** Metadata-level frame-sample plan for video: the kept frame indices
     * (every `everyN`-th, capped) — the same bookkeeping the existing
@@ -1664,22 +1611,11 @@ object Multimodal {
     * column (same iterator plumbing as [[decodeImages]]). */
   def decodeAudio(df0: DataFrame, contentCol: String, dim: Int = 16,
                   outCol: String = "audio_features",
-                  minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol,
-      ArrayType(FloatType, containsNull = false), nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val feats = if (bytes == null) null
-        else AudioCodec.features(bytes, dim).toSeq
-        Row.fromSeq(r.toSeq :+ feats)
-      }
-    }(enc)
-  }
+                  minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol,
+      ArrayType(FloatType, containsNull = false), minPartitions) { bytes =>
+      AudioCodec.features(bytes, dim).toSeq
+    }
 
   /** struct carried by [[audioStats]] */
   val pcmStatsSchema: StructType = StructType(Seq(
@@ -1697,25 +1633,13 @@ object Multimodal {
     * non-PCM payloads. Same iterator plumbing as [[probeAudio]]. */
   def audioStats(df0: DataFrame, contentCol: String,
                  outCol: String = "pcm_stats",
-                 minPartitions: Option[Int] = None): DataFrame = {
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, pcmStatsSchema,
-      nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null
-        else AudioCodec.pcmStats(bytes) match {
-          case Some((n, sq, zc, pk)) => Row(n, sq, zc, pk)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
+                 minPartitions: Option[Int] = None): DataFrame =
+    byteKernel(df0, contentCol, outCol, pcmStatsSchema, minPartitions) { bytes =>
+      AudioCodec.pcmStats(bytes) match {
+        case Some((n, sq, zc, pk)) => Row(n, sq, zc, pk)
+        case None => null
       }
-    }(enc)
-  }
+    }
 
   /** struct carried by [[audioSilence]] */
   val silenceSchema: StructType = StructType(Seq(
@@ -1731,23 +1655,12 @@ object Multimodal {
                    threshold: Long, outCol: String = "silence",
                    minPartitions: Option[Int] = None): DataFrame = {
     require(window >= 1 && threshold >= 0)
-    val df = ensureParallelism(df0, minPartitions)
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField(outCol, silenceSchema,
-      nullable = true))
-    val idx = inSchema.fieldIndex(contentCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](idx)
-        val m = if (bytes == null) null
-        else AudioCodec.silenceStats(bytes, window, threshold) match {
-          case Some((nw, ns, mx)) => Row(nw, ns, mx)
-          case None => null
-        }
-        Row.fromSeq(r.toSeq :+ m)
+    byteKernel(df0, contentCol, outCol, silenceSchema, minPartitions) { bytes =>
+      AudioCodec.silenceStats(bytes, window, threshold) match {
+        case Some((nw, ns, mx)) => Row(nw, ns, mx)
+        case None => null
       }
-    }(enc)
+    }
   }
 
   /** Metadata-level frame sampling: every `everyN`-th sample — the audio

@@ -121,21 +121,26 @@ object Similarity {
         s"THEN ${1L << j} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  /** Per-query top-k finisher over a scored (__qid, __cid, __sim)
-    * relation, via the bounded-heap partial aggregate
-    * [[graft.functions.TopKByScore]]. Map-side partial aggregation
-    * truncates each partition's state to k pairs BEFORE the shuffle, so
-    * the exchange carries ≤ k·partitions rows per query — the previous
-    * `row_number() OVER (PARTITION BY __qid)` form shuffled the entire
-    * n·q scored relation into q reducer partitions, a handful of hot
-    * reducers at corpus scale. Same output, same (sim desc, id asc)
-    * deterministic order. */
-  private def finishTopK(scored: DataFrame, k: Int): DataFrame =
+  /** Per-query top-k finisher over a scored relation keyed by __qid —
+    * the one group → [[graft.functions.TopKByScore]] → posexplode →
+    * rank tail of every top-k path (cosine, ADC, BM25). `score` ranks
+    * descending (ties by `id` ascending); `scoreOut` maps the kept
+    * `__e.score` back to the output column. Map-side partial
+    * aggregation truncates each partition's state to k pairs BEFORE
+    * the shuffle, so the exchange carries ≤ k·partitions rows per
+    * query — the previous `row_number() OVER (PARTITION BY __qid)` form
+    * shuffled the entire n·q scored relation into q reducer partitions,
+    * a handful of hot reducers at corpus scale. Output: (query_id,
+    * rank, `idOut`, `scoreOut`). */
+  private[operators] def finishTopK(scored: DataFrame, k: Int,
+      score: Column = col("__sim"), id: String = "__cid",
+      idOut: String = "neighbor_id",
+      scoreOut: Column = col("__e.score").as("cosine")): DataFrame =
     scored.groupBy("__qid")
-      .agg(graft.functions.TopKByScore(col("__sim"), col("__cid").cast("long"), k).as("__top"))
+      .agg(graft.functions.TopKByScore(score, col(id).cast("long"), k).as("__top"))
       .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
       .select(col("__qid").as("query_id"), (col("__pos") + 1).as("rank"),
-        col("__e.id").as("neighbor_id"), col("__e.score").as("cosine"))
+        col("__e.id").as(idOut), scoreOut)
 
   /** Exact cosine top-k: for each row of `queries`, the k nearest corpus
     * rows. Output: (queryId, rank, neighborId, cosine). */
@@ -687,6 +692,43 @@ object Similarity {
       (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
       lit(0.0), (acc, x) => acc + x)
 
+  /** The PQ shape contract every encode/ADC/index path checks before
+    * any Spark work: `m` divides `dim`, and a caller codebook is `m` ×
+    * `ksub` × subDim. A wrong subDim would not fail later: zip_with pads
+    * the slice against the centroid with nulls and every distance goes
+    * null — garbage codes with no error. Returns subDim = dim / m. */
+  private def pqSubDim(m: Int, ksub: Int, dim: Int,
+                       codebook: Option[Seq[Seq[Seq[Double]]]]): Int = {
+    require(dim % m == 0, s"m=$m must divide dim=$dim")
+    val subDim = dim / m
+    require(codebook.forall(c => c.size == m && c.forall(s =>
+      s.size == ksub && s.forall(_.size == subDim))),
+      s"codebook shape must be $m x $ksub x $subDim")
+    subDim
+  }
+
+  /** A query's m×ksub ADC distance table over its vector `__qv`:
+    * element (j, c) is the squared L2 distance of subvector j to code c
+    * — computed ONCE per query, the same [[l2sq]] chain [[pqEncode]]
+    * minted the codes with. */
+  private def adcTable(cb: Seq[Seq[Seq[Double]]], m: Int, ksub: Int,
+                       subDim: Int): Column =
+    array((0 until m).map(j =>
+      array((0 until ksub).map(c =>
+        l2sq(slice(col("__qv"), j * subDim + 1, subDim), cb(j)(c))): _*)): _*)
+
+  /** ADC scoring + top-k over (query, candidate) rows carrying __qid,
+    * __cid, the query's `__tbl` ([[adcTable]]) and the candidate's
+    * stored `__codes`: m table lookups + m−1 adds per row, smallest
+    * distance first (ties by id). The one tail of [[pqTopK]] and
+    * [[ivfPqTopKIndexed]] — only the candidate join differs. Output:
+    * (query_id, rank, neighbor_id, adc). */
+  private def adcTopK(candidates: DataFrame, m: Int, k: Int): DataFrame =
+    finishTopK(candidates.select(col("__qid"), col("__cid"),
+        (0 until m).map(j => element_at(element_at(col("__tbl"), j + 1),
+          element_at(col("__codes"), j + 1))).reduce(_ + _).as("__adc")),
+      k, negate(col("__adc")), scoreOut = negate(col("__e.score")).as("adc"))
+
   /** Product-quantization encoding: compress each `dim`-float vector to
     * `m` small codes (one byte each at ksub ≤ 256) — the standard 10–50×
     * memory cut that makes billion-vector ANN fit a cluster's RAM. Each
@@ -700,14 +742,7 @@ object Similarity {
                m: Int = 4, ksub: Int = 8, dim: Int = 64,
                seed: Long = 42L,
                codebook: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val subDim = dim / m
-    // a wrong subDim would not fail: zip_with pads the slice against
-    // the centroid with nulls and every distance goes null — garbage
-    // codes with no error
-    require(codebook.forall(c => c.size == m && c.forall(s =>
-      s.size == ksub && s.forall(_.size == subDim))),
-      s"codebook shape must be $m x $ksub x $subDim")
+    val subDim = pqSubDim(m, ksub, dim, codebook)
     val cb = codebook.getOrElse(pqCodebook(m, ksub, subDim, seed))
     val codes = array((0 until m).map { j =>
       val sub = slice(col(vecCol), j * subDim + 1, subDim)
@@ -765,29 +800,13 @@ object Similarity {
              k: Int, m: Int = 4, ksub: Int = 8, dim: Int = 64,
              seed: Long = 42L,
              codebook: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val subDim = dim / m
-    require(codebook.forall(c => c.size == m && c.forall(s =>
-      s.size == ksub && s.forall(_.size == subDim))),
-      s"codebook shape must be $m x $ksub x $subDim")
+    val subDim = pqSubDim(m, ksub, dim, codebook)
     val cb = codebook.getOrElse(pqCodebook(m, ksub, subDim, seed))
     val enc = pqEncode(corpus, idCol, vecCol, m, ksub, dim, seed, codebook)
       .select(col("vec_id").as("__cid"), col("codes").as("__codes"))
-    val tbl = array((0 until m).map(j =>
-      array((0 until ksub).map(c =>
-        l2sq(slice(col("__qv"), j * subDim + 1, subDim), cb(j)(c))): _*)): _*)
     val q = queries.select(col(qidCol).as("__qid"), col(qvecCol).as("__qv"))
-      .select(col("__qid"), tbl.as("__tbl"))
-    val scored = enc.crossJoin(broadcast(q))
-      .select(col("__qid"), col("__cid"),
-        (0 until m).map(j => element_at(element_at(col("__tbl"), j + 1),
-          element_at(col("__codes"), j + 1))).reduce(_ + _).as("__adc"))
-    scored.groupBy("__qid")
-      .agg(graft.functions.TopKByScore(negate(col("__adc")),
-        col("__cid").cast("long"), k).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("__qid").as("query_id"), (col("__pos") + 1).as("rank"),
-        col("__e.id").as("neighbor_id"), negate(col("__e.score")).as("adc"))
+      .select(col("__qid"), adcTable(cb, m, ksub, subDim).as("__tbl"))
+    adcTopK(enc.crossJoin(broadcast(q)), m, k)
   }
 
   /** Build and PERSIST an IVF-PQ index — the [[buildIvfIndex]] layout
@@ -811,13 +830,11 @@ object Similarity {
                       dim: Int = 64, seed: Long = 42L,
                       codebook: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
     require(nlist > 0 && buckets > 0 && lloydIters >= 0)
-    require(codebook.forall(c => c.size == m && c.forall(s =>
-      s.size == ksub && s.forall(_.size == dim / m))),
-      s"codebook shape must be $m x $ksub x ${dim / m}")
+    val subDim = pqSubDim(m, ksub, dim, codebook)
     val spark = corpus.sparkSession
     Seq(table, s"${table}_centroids", s"${table}_codebook")
       .foreach(Bucketing.dropForRewrite(spark, _))
-    val cbUsed = codebook.getOrElse(pqCodebook(m, ksub, dim / m, seed))
+    val cbUsed = codebook.getOrElse(pqCodebook(m, ksub, subDim, seed))
     import spark.implicits._
     cbUsed.zipWithIndex.flatMap { case (cents, j) =>
       cents.zipWithIndex.flatMap { case (cent, c) =>
@@ -858,9 +875,9 @@ object Similarity {
   def appendToIvfPqIndex(newVectors: DataFrame, idCol: String, vecCol: String,
                          table: String, m: Int = 4, ksub: Int = 8,
                          dim: Int = 64, seed: Long = 42L): Unit = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
+    val subDim = pqSubDim(m, ksub, dim, None)
     val spark = newVectors.sparkSession
-    val cb = loadCodebook(spark, table, m, ksub, dim / m, seed)
+    val cb = loadCodebook(spark, table, m, ksub, subDim, seed)
     val assigned = assignClusters(
       newVectors.select(col(idCol).as("__cid"), col(vecCol).as("__cv")),
       "__cid", "__cv", spark.table(s"${table}_centroids"), 1)
@@ -912,8 +929,10 @@ object Similarity {
     * PRUNES to the probed lists' buckets, and scoring is pure ADC —
     * each query's m×ksub distance table rides the broadcast join and
     * every pruned corpus row costs m list lookups on its stored codes.
-    * nprobe = nlist degrades to exactly [[pqTopK]] over the whole
-    * corpus (the oracle path). The query-side distance tables build
+    * The distance table is [[adcTable]] and the scoring tail
+    * [[adcTopK]], the same two functions [[pqTopK]] runs, so nprobe =
+    * nlist is [[pqTopK]] over the whole corpus (the oracle path) by
+    * construction. The query-side distance tables build
     * against the codebook PERSISTED WITH the index (`{table}_codebook`)
     * — trained or seeded, whatever minted the stored codes — so a
     * trained index round-trips through build → probe with no caller
@@ -923,29 +942,17 @@ object Similarity {
                        queries: DataFrame, qidCol: String, qvecCol: String,
                        k: Int, nprobe: Int = 8, m: Int = 4, ksub: Int = 8,
                        dim: Int = 64, seed: Long = 42L): DataFrame = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val subDim = dim / m
+    val subDim = pqSubDim(m, ksub, dim, None)
     val cb = loadCodebook(spark, table, m, ksub, subDim, seed)
     val cent = spark.table(s"${table}_centroids")
-    val tbl = array((0 until m).map(j =>
-      array((0 until ksub).map(c =>
-        l2sq(slice(col("__qv"), j * subDim + 1, subDim), cb(j)(c))): _*)): _*)
     val q = assignClusters(
       queries.select(col(qidCol).as("__qid"), col(qvecCol).as("__qv")),
       "__qid", "__qv", cent, nprobe)
-      .select(col("__qid"), col("__cluster"), tbl.as("__tbl"))
+      .select(col("__qid"), col("__cluster"),
+        adcTable(cb, m, ksub, subDim).as("__tbl"))
     val probed = q.select("__cluster").distinct().collect().map(_.get(0))
     val c = spark.table(table).where(col("__cluster").isin(probed.toSeq: _*))
-    val scored = c.join(broadcast(q), Seq("__cluster"))
-      .select(col("__qid"), col("__cid"),
-        (0 until m).map(j => element_at(element_at(col("__tbl"), j + 1),
-          element_at(col("__codes"), j + 1))).reduce(_ + _).as("__adc"))
-    scored.groupBy("__qid")
-      .agg(graft.functions.TopKByScore(negate(col("__adc")),
-        col("__cid").cast("long"), k).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("__qid").as("query_id"), (col("__pos") + 1).as("rank"),
-        col("__e.id").as("neighbor_id"), negate(col("__e.score")).as("adc"))
+    adcTopK(c.join(broadcast(q), Seq("__cluster")), m, k)
   }
 
   /** [[ivfPqTopKIndexed]] + an exact re-rank stage — the standard FAISS

@@ -390,37 +390,91 @@ object TextAnalysis {
            queries: DataFrame, qidCol: String, qtextCol: String,
            k1: Double = 1.2, b: Double = 0.75, topK: Int = 10,
            excludeSelf: Boolean = true): DataFrame = {
-    // the tokenize explode fuses into the scan — spread a narrow/
-    // unsplittable input first (identity at scale; [[Spread]])
-    val toks = Spread.ifSmall(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("__did"),
-      explode(tokens(col(textCol))).as("__t"))
+    val toks = bm25Tokens(docs, idCol, textCol)
     val docLen = toks.groupBy("__did").agg(count(lit(1)).as("__len"))
-    val tf = toks.groupBy("__did", "__t").agg(count(lit(1)).as("__tf"))
+    val tf = bm25TermFreqs(toks)
     val dfreq = tf.groupBy("__t").agg(count(lit(1)).as("__df"))
     val stats = docLen.agg(count(lit(1)).as("__n"), sum("__len").as("__tot"))
-    val qt = queries.select(col(qidCol).as("__qid"),
+    val qt = bm25QueryTerms(queries, qidCol, qtextCol)
+    bm25Score(qt.join(tf.join(dfreq, "__t"), "__t").join(docLen, "__did"),
+      stats, k1, b, topK, excludeSelf)
+  }
+
+  /** The `(__did, __t)` token stream every BM25 path scores or indexes.
+    * The tokenize explode fuses into the scan — a narrow/unsplittable
+    * input spreads first (identity at scale; [[Spread]]). */
+  private def bm25Tokens(docs: DataFrame, idCol: String,
+                         textCol: String): DataFrame =
+    Spread.ifSmall(docs.select(col(idCol), col(textCol)))
+      .select(col(idCol).as("__did"),
+      explode(tokens(col(textCol))).as("__t"))
+
+  private def bm25TermFreqs(toks: DataFrame): DataFrame =
+    toks.groupBy("__did", "__t").agg(count(lit(1)).as("__tf"))
+
+  /** The distinct `(__qid, __t)` terms of a query batch. */
+  private def bm25QueryTerms(queries: DataFrame, qidCol: String,
+                             qtextCol: String): DataFrame =
+    queries.select(col(qidCol).as("__qid"),
       explode(array_distinct(tokens(col(qtextCol)))).as("__t"))
+
+  /** The postings relation `(__t, __did, __tf, __len)` that
+    * [[buildBm25Index]] writes and [[appendToBm25Index]] appends: doc
+    * length folds into the tf aggregate as a window (`sum(__tf) OVER
+    * (PARTITION BY __did)` ≡ the raw token count; the window input is
+    * the already-reduced tf relation, never the token stream, and a
+    * partition is one doc's distinct terms — bounded). */
+  private def bm25Postings(docs: DataFrame, idCol: String,
+                           textCol: String): DataFrame = {
+    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("__did")
+    bm25TermFreqs(bm25Tokens(docs, idCol, textCol))
+      .select(col("__t"), col("__did"), col("__tf"),
+        sum("__tf").over(byDoc).as("__len"))
+  }
+
+  /** Derive an index's `{table}_df` and `{table}_stats` side tables from
+    * its STORED postings — what build and delete both run: per-term df
+    * is bucket-local (zero exchange) and (n, tot) is one
+    * `(count_distinct(__did), sum(__tf))` pass over the compact index,
+    * both exact integer aggregates. Both read only the postings (no
+    * self-read); the caller has dropped the old side tables. */
+  private def deriveBm25SideTables(spark: org.apache.spark.sql.SparkSession,
+                                   table: String): Unit = {
+    val stored = spark.table(table)
+    stored.groupBy("__t").agg(count(lit(1)).as("__df"))
+      .write.mode("overwrite").format("parquet")
+      .saveAsTable(s"${table}_df")
+    stored.agg(count_distinct(col("__did")).as("__n"),
+        coalesce(sum("__tf"), lit(0L)).as("__tot"))
+      .write.mode("overwrite").format("parquet")
+      .saveAsTable(s"${table}_stats")
+  }
+
+  /** The scoring tail of [[bm25]] and [[bm25AgainstIndex]], over a
+    * candidate relation carrying (__qid, __did, __tf, __len, __df) and a
+    * one-row (__n, __tot) stats relation: idf · tfn per matched term,
+    * quantized to integer nano-units BEFORE the per-(query, doc) sum
+    * (association-order-exact), then the bounded per-query top-k
+    * ([[Similarity.finishTopK]]). Only the candidate join differs
+    * between the two paths, so single-shot ≡ indexed bit for bit. */
+  private def bm25Score(candidates: DataFrame, stats: DataFrame,
+                        k1: Double, b: Double, topK: Int,
+                        excludeSelf: Boolean): DataFrame = {
     val idf = log((col("__n").cast("double") - col("__df").cast("double") + 0.5) /
       (col("__df").cast("double") + 0.5) + 1.0)
     val avglen = col("__tot").cast("double") / col("__n").cast("double")
     val tfd = col("__tf").cast("double")
     val tfn = tfd * (k1 + 1.0) /
       (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * col("__len").cast("double") / avglen))
-    val perTerm = qt.join(tf.join(dfreq, "__t"), "__t")
-      .join(docLen, "__did")
+    val summed = candidates
       .crossJoin(broadcast(stats))
       .where(if (excludeSelf) col("__did") =!= col("__qid") else lit(true))
       .select(col("__qid"), col("__did"),
         floor(idf * tfn * 1e9).cast("long").as("__q"))
-    val summed = perTerm.groupBy("__qid", "__did")
+      .groupBy("__qid", "__did")
       .agg(sum("__q").as("__s"))
-    summed.groupBy("__qid")
-      .agg(graft.functions.TopKByScore(
-        col("__s").cast("double"), col("__did").cast("long"), topK).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("__qid").as("query_id"), (col("__pos") + 1).as("rank"),
-        col("__e.id").as("doc_id"), (col("__e.score") / 1e9).as("bm25"))
+    Similarity.finishTopK(summed, topK, col("__s").cast("double"), "__did",
+      "doc_id", (col("__e.score") / 1e9).as("bm25"))
   }
 
   /** Build and PERSIST a BM25 postings index — the sparse-retrieval
@@ -445,38 +499,19 @@ object TextAnalysis {
     * df merge per append ([[appendToBm25Index]]).
     *
     * The corpus text is scanned and tokenized exactly ONCE — the
-    * postings job folds doc length into the tf aggregate as a window
-    * (`sum(__tf) OVER (PARTITION BY __did)` ≡ the raw token count; the
-    * window input is the already-reduced tf relation, never the token
-    * stream, and a partition is one doc's distinct terms — bounded) —
-    * and the df/stats tables aggregate the ALREADY-WRITTEN postings:
-    * per-term df is bucket-local (zero exchange), and (n, tot) is one
-    * `(count_distinct(__did), sum(__tf))` pass over the compact index,
-    * not a re-read of 100 TB of text. */
+    * postings job ([[bm25Postings]]) folds doc length into the tf
+    * aggregate as a window — and the df/stats tables aggregate the
+    * ALREADY-WRITTEN postings ([[deriveBm25SideTables]]), not a re-read
+    * of 100 TB of text. */
   def buildBm25Index(docs: DataFrame, idCol: String, textCol: String,
                      table: String, buckets: Int = 32): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = docs.sparkSession
     Seq(table, s"${table}_df", s"${table}_stats")
       .foreach(Bucketing.dropForRewrite(spark, _))
-    // the tokenize explode fuses into the scan — spread a narrow/
-    // unsplittable input first (identity at scale; [[Spread]])
-    val toks = Spread.ifSmall(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("__did"),
-      explode(tokens(col(textCol))).as("__t"))
-    val tf = toks.groupBy("__did", "__t").agg(count(lit(1)).as("__tf"))
-    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("__did")
-    val postings = tf.select(col("__t"), col("__did"), col("__tf"),
-      sum("__tf").over(byDoc).as("__len"))
-    Bucketing.writeBucketed(postings, table, "__t", buckets)
-    val stored = spark.table(table)
-    stored.groupBy("__t").agg(count(lit(1)).as("__df"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_df")
-    stored.agg(count_distinct(col("__did")).as("__n"),
-        coalesce(sum("__tf"), lit(0L)).as("__tot"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_stats")
+    Bucketing.writeBucketed(bm25Postings(docs, idCol, textCol), table, "__t",
+      buckets)
+    deriveBm25SideTables(spark, table)
     spark.table(table)
   }
 
@@ -499,20 +534,12 @@ object TextAnalysis {
     // would shear them across executor disks on a real cluster)
     val scratch = new Scratch(spark, "appendToBm25Index",
       "graft-bm25-merge", scratchDir)
-    // the tokenize explode fuses into the scan — spread a narrow/
-    // unsplittable input first (identity at scale; [[Spread]])
-    val toks = Spread.ifSmall(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("__did"),
-      explode(tokens(col(textCol))).as("__t"))
-    val tf = toks.groupBy("__did", "__t").agg(count(lit(1)).as("__tf"))
-    val byDoc = org.apache.spark.sql.expressions.Window.partitionBy("__did")
     // ONE tokenize pass over the batch (build-path treatment — see
     // buildBm25Index): batch postings land in scratch parquet first,
     // and the bucketed append, the df merge, and the stats add all
     // read the compact postings instead of re-tokenizing the text
-    val bp = scratch.materialize(
-      tf.select(col("__t"), col("__did"), col("__tf"),
-        sum("__tf").over(byDoc).as("__len")), "batch_postings")
+    val bp = scratch.materialize(bm25Postings(docs, idCol, textCol),
+      "batch_postings")
     Bucketing.appendBucketed(
       bp.select(col("__t"), col("__did"), col("__tf"), col("__len")),
       table, "__t")
@@ -538,6 +565,8 @@ object TextAnalysis {
         Bucketing.swapIn(spark, name)(
           df.write.mode("overwrite").format("parquet").saveAsTable(_))
       }
+    // both swaps have read the snapshot: nothing else does
+    scratch.drop("batch_postings")
   }
 
   /** Tombstone-apply for the BM25 index — the takedown/opt-out write
@@ -552,13 +581,12 @@ object TextAnalysis {
     * and token mass the same way. SINGLE-PASS: the postings rewrite is
     * [[Bucketing.deleteFromBucketed]] (anti-join through scratch,
     * bucket/sort layout preserved, doubles as a compaction), and df /
-    * stats then RECOMPUTE from the rewritten postings exactly as the
-    * build path does — per-term df is bucket-local (zero exchange) and
-    * (n, tot) is one pass over the compact index, both EXACT integer
-    * aggregates, so recompute ≡ decrement bit for bit while the
-    * dead-postings semi-join, its two decrement snapshots and the two
-    * merge-through-scratch writes all disappear (4 table-write cycles
-    * instead of 9; guide §2.4 — fewer passes, and the extra aggregate
+    * stats then RECOMPUTE from the rewritten postings through
+    * [[deriveBm25SideTables]], the function the build path calls —
+    * per-term df is bucket-local (zero exchange) and (n, tot) is one
+    * pass over the compact index, both EXACT integer aggregates, so
+    * recompute ≡ decrement bit for bit with no dead-postings semi-join
+    * or decrement snapshots (fewer passes, and the extra aggregate
     * rides a relation the rewrite already scans). Ids absent from the
     * index are no-ops — takedown lists are routinely replayed. Cost:
     * one scan/shuffle of the compact index relation, never the corpus
@@ -568,19 +596,11 @@ object TextAnalysis {
                           idCol: String): Unit = {
     Bucketing.deleteFromBucketed(spark,
       table, deleteIds.select(col(idCol).as("__did")), "__did")
-    // df/stats from the SURVIVING postings — the buildBm25Index step
-    // verbatim: reads the just-rewritten postings table, writes the two
-    // side tables (no self-read, no scratch hop needed)
-    val stored = spark.table(table)
-    Bucketing.dropForRewrite(spark, s"${table}_df")
-    stored.groupBy("__t").agg(count(lit(1)).as("__df"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_df")
-    Bucketing.dropForRewrite(spark, s"${table}_stats")
-    stored.agg(count_distinct(col("__did")).as("__n"),
-        coalesce(sum("__tf"), lit(0L)).as("__tot"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${table}_stats")
+    // df/stats from the SURVIVING postings (no self-read, no scratch
+    // hop needed)
+    Seq(s"${table}_df", s"${table}_stats")
+      .foreach(Bucketing.dropForRewrite(spark, _))
+    deriveBm25SideTables(spark, table)
   }
 
   /** Score a query batch against a [[buildBm25Index]] index: the
@@ -589,43 +609,23 @@ object TextAnalysis {
     * too big to broadcast), yielding a (qid, term, df) relation bounded
     * by the query batch, which then broadcasts onto the postings scan —
     * so BOTH index relations are consumed exchange-free (plan-asserted
-    * in OperatorsSpec). Per-term scores
-    * quantize and sum exactly as [[bm25]] does (identical integers in,
-    * identical expressions, identical floor — single-shot ≡ indexed,
-    * bit for bit). Only matched postings ever leave the scan; the one
-    * exchange is the candidate-(query, doc) aggregate. Output:
-    * (query_id, rank, doc_id, bm25). */
+    * in OperatorsSpec). Scoring is [[bm25Score]], the one tail
+    * [[bm25]] also runs — only the candidate join differs, so
+    * single-shot ≡ indexed bit for bit by construction. Only matched
+    * postings ever leave the scan; the one exchange is the
+    * candidate-(query, doc) aggregate. Output: (query_id, rank, doc_id,
+    * bm25). */
   def bm25AgainstIndex(spark: org.apache.spark.sql.SparkSession,
                        table: String, queries: DataFrame, qidCol: String,
                        qtextCol: String, k1: Double = 1.2,
                        b: Double = 0.75, topK: Int = 10,
                        excludeSelf: Boolean = true): DataFrame = {
-    val qt0 = queries.select(col(qidCol).as("__qid"),
-      explode(array_distinct(tokens(col(qtextCol)))).as("__t"))
+    val qt0 = bm25QueryTerms(queries, qidCol, qtextCol)
     // df streams, the query batch broadcasts — never the reverse
     val qt = spark.table(s"${table}_df").join(broadcast(qt0), "__t")
       .select(col("__qid"), col("__t"), col("__df"))
-    val stats = spark.table(s"${table}_stats")
-    val idf = log((col("__n").cast("double") - col("__df").cast("double") + 0.5) /
-      (col("__df").cast("double") + 0.5) + 1.0)
-    val avglen = col("__tot").cast("double") / col("__n").cast("double")
-    val tfd = col("__tf").cast("double")
-    val tfn = tfd * (k1 + 1.0) /
-      (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * col("__len").cast("double") / avglen))
-    val perTerm = spark.table(table)
-      .join(broadcast(qt), "__t")
-      .crossJoin(broadcast(stats))
-      .where(if (excludeSelf) col("__did") =!= col("__qid") else lit(true))
-      .select(col("__qid"), col("__did"),
-        floor(idf * tfn * 1e9).cast("long").as("__q"))
-    val summed = perTerm.groupBy("__qid", "__did")
-      .agg(sum("__q").as("__s"))
-    summed.groupBy("__qid")
-      .agg(graft.functions.TopKByScore(
-        col("__s").cast("double"), col("__did").cast("long"), topK).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("__qid").as("query_id"), (col("__pos") + 1).as("rank"),
-        col("__e.id").as("doc_id"), (col("__e.score") / 1e9).as("bm25"))
+    bm25Score(spark.table(table).join(broadcast(qt), "__t"),
+      spark.table(s"${table}_stats"), k1, b, topK, excludeSelf)
   }
 
   /** A [[bm25]] score rounded to 6 decimals in the integer domain:

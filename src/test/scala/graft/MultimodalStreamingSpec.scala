@@ -309,6 +309,59 @@ class MultimodalStreamingSpec extends AnyFunSuite {
     assert(Multimodal.AudioCodec.silenceStats("junk".getBytes, 2, 1L).isEmpty)
   }
 
+  test("multimodal: audioSilence lands a struct per PCM row, NULL otherwise; window 0 runs no job") {
+    def le16(v: Int): Seq[Byte] =
+      Seq((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte)
+    def le32b(v: Int): Seq[Byte] = Seq(v & 0xFF, (v >> 8) & 0xFF,
+      (v >> 16) & 0xFF, (v >> 24) & 0xFF).map(_.toByte)
+    val data = Seq(100, -200, 300, 0, -1).flatMap(le16)
+    val wav = ("RIFF".getBytes("US-ASCII") ++ le32b(36 + data.size) ++
+      "WAVEfmt ".getBytes("US-ASCII") ++ le32b(16) ++
+      Seq[Byte](1, 0, 1, 0) ++ le32b(8000) ++ le32b(16000) ++
+      Seq[Byte](2, 0, 16, 0) ++
+      "data".getBytes("US-ASCII") ++ le32b(data.size) ++ data).toArray
+    import spark.implicits._
+    val df = Seq((1, wav), (2, "junk".getBytes), (3, null: Array[Byte]))
+      .toDF("id", "content")
+    val rows = Multimodal.audioSilence(df, "content", window = 2,
+        threshold = 60000L)
+      .select("id", "silence").collect().map(r => r.getInt(0) -> r).toMap
+    // window 2 → energies 50000 and 90000 (ragged 5th sample excluded):
+    // one window under 60000, max 90000
+    val st = rows(1).getStruct(1)
+    assert((st.getLong(0), st.getLong(1), st.getLong(2)) == ((2L, 1L, 90000L)))
+    assert(rows(2).isNullAt(1), "a non-PCM payload must give a NULL struct")
+    assert(rows(3).isNullAt(1), "a NULL payload must give a NULL struct")
+
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(ev.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("silence-bad-window", "window = 0")
+      intercept[IllegalArgumentException](
+        Multimodal.audioSilence(df, "content", window = 0, threshold = 1L,
+          minPartitions = Some(8)))
+      // job starts arrive in order: once the sentinel's has, so has any
+      // job the call above started
+      sc.setJobGroup("silence-sentinel", "sentinel")
+      sc.parallelize(Seq(1)).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("silence-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.contains("silence-sentinel"), "the sentinel job never reached the listener")
+    val early = groups.toArray.count(_ == "silence-bad-window")
+    assert(early == 0, s"$early Spark jobs ran before the window check")
+  }
+
   test("multimodal: probeVideo box-walks exactly what withMp4Payload wrote") {
     val docs = spark.read.parquet(s"$dir/documents.parquet").limit(30)
     val mm = Multimodal.withMp4Payload(docs, "text")

@@ -1312,6 +1312,23 @@ class OperatorsSpec extends AnyFunSuite {
     assert((stA.getLong(0), stA.getLong(1)) == (st.getLong(0), st.getLong(1)))
   }
 
+  test("appendToBm25Index drops its batch postings from an explicit scratchDir") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text").limit(60)
+    val scratch = java.nio.file.Files.createTempDirectory("bm25-append-scratch")
+    TextAnalysis.buildBm25Index(docs.where(col("doc_id") < 30),
+      "doc_id", "text", "bm25spec_scratch", buckets = 4)
+    TextAnalysis.appendToBm25Index(docs.where(col("doc_id") >= 30),
+      "doc_id", "text", "bm25spec_scratch",
+      scratchDir = Some(scratch.toString))
+    val left = Option(scratch.toFile.list()).map(_.toSeq).getOrElse(Nil)
+    assert(!left.contains("batch_postings"),
+      s"the append left its snapshot behind: $left")
+    // the merged side tables were written before the drop
+    val st = spark.table("bm25spec_scratch_stats").collect()(0)
+    assert(st.getLong(0) == docs.count())
+  }
+
   test("deleteFromBm25Index: postings, df AND stats shrink exactly to the from-scratch survivor build") {
     import graft.operators.Bucketing
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -3311,8 +3328,8 @@ class OperatorsSpec extends AnyFunSuite {
     Bucketing.writeBucketed(
       Incremental.aggregateState(delta, Seq("k"), "v"), "incr_delta_b", "k", 8)
     val merged = Incremental.mergeState(
-      Bucketing.read(spark, "incr_snap_b"),
-      Bucketing.read(spark, "incr_delta_b"), Seq("k"))
+      spark.table("incr_snap_b"),
+      spark.table("incr_delta_b"), Seq("k"))
     merged.write.format("noop").mode("overwrite").save()
     val plan = merged.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
