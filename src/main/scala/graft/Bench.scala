@@ -1,13 +1,13 @@
 package graft
 
 /** Bench harness: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with the total and one
+  * subtotal per query family; per-query seconds go to the side file
+  * (`bench_last.json`).
   *
-  * Queries are materialized through the `noop` data source — a full
-  * evaluation of every output column — because `count()` lets Catalyst
-  * prune computed columns and under-reports projection-heavy queries.
-  * One warmup query first so JVM/codegen startup is not billed to the
-  * first query in map order. */
+  * Each query is one [[graft.tools.BoxSentinel.timedNoop]] run through
+  * the `noop` sink. One warmup query first so JVM/codegen startup is
+  * not billed to the first query in map order. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -26,7 +26,7 @@ object Bench {
     // SPARK_GRAFT_ONLY iteration run never writes it, so blocking a
     // sub-minute dev loop for up to two minutes buys nothing
     val gateWaitSec =
-      if (sys.env.contains("SPARK_GRAFT_ONLY")) 0L
+      if (SparkEntry.only.nonEmpty) 0L
       else sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT", "120").toLong
     val gateDeadline = System.nanoTime() + gateWaitSec * 1000000000L
     var preLoad = graft.tools.BoxSentinel.loadAvg()
@@ -60,41 +60,16 @@ object Bench {
     // (shared-box noise — see BASELINE.md "Noise envelope"), so every
     // sweep now carries the data to tell GC/memory pressure apart from
     // plan regressions without a rerun.
-    import scala.jdk.CollectionConverters._
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-    val heapPools = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-    def gcMillis: Long = gcBeans.map(_.getCollectionTime).sum
-
-    // (wall sec, GC sec inside the window, peak heap MB in the window)
-    def runOne(name: String): (Double, Double, Double) = {
-      heapPools.foreach(_.resetPeakUsage())
-      val g0 = gcMillis
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return (-1.0, -1.0, -1.0)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val gcSec = (gcMillis - g0) / 1e3
-      val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / 1e6
-      (sec, gcSec, peakMb)
-    }
+    def runOne(name: String): (Double, Double, Double) =
+      BoxSentinel.timedNoop("bench", name)(SparkEntry.queries(name)(spark, sfDir))
 
     // warmup: touch every table once + exercise codegen paths
     try SparkEntry.queries.headOption.foreach { case (n, _) => runOne(n) }
     catch { case _: Throwable => () }
 
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the sweep for local iteration;
-    // the driver leaves it unset and measures the full alphabetical run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    // SPARK_GRAFT_ONLY restricts the sweep for local iteration; the
+    // driver leaves it unset and measures the full alphabetical run.
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(SparkEntry.isSelected)
     val firstPass = names.map(n => n -> runOne(n))
 
     // Contention self-defense (round-9 verdict item 3): a transient
@@ -152,14 +127,10 @@ object Bench {
     val peak = field(_._3)
     val total = results.map(_._2._1).filter(_ >= 0).sum
     // a crashed query (-1.0) must never silently shrink the total the
-    // perf gate compares — name every failure in the JSON itself
+    // perf gate compares — count every failure in the JSON itself and
+    // name it in the side file
     val failedNames = results.collect { case (k, (w, _, _)) if w < 0 => k }
     val failed = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Field order matters: the driver keeps only the TAIL of this line
-    // (BENCH_r05..r13 all landed as parsed:null to truncation). The
-    // stdout line below is therefore minimal — diagnostics live in the
-    // side file only — and the per-query map + headline total close the
-    // object so they survive any head-truncation of the captured line.
     val (jvms1, load1) = (BoxSentinel.jvmCount(), BoxSentinel.loadAvg())
     val sentinel = BoxSentinel.jsonFields(jvms0, load0, jvms1, load1)
     // first_pass_total = single-sample sum (pre-rerun) so judges can
@@ -170,22 +141,26 @@ object Bench {
     val firstPassTotal = firstPass.map(_._2._1).filter(_ >= 0).sum
     val policy = "\"min2: 20 slowest >=2s + any >2x committed (>=0.4s)\""
     val jsonFull = s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_failed":${failedNames.size},"failed":$failed,"contended":$contended,"pre_load":$preLoad,$sentinel,"rerun_policy":$policy,"first_pass_total":$firstPassTotal,"rerun_min2":$rerunJson,"peak_mb":$peak,"gc_sec":$gc,"queries":$qs,"value":$total}"""
-    // The STDOUT line carries ONLY the contract fields, with 3-decimal
-    // per-query seconds and `value` printed dead last: every earlier
-    // round's line also carried the rerun/peak/gc diagnostic maps
-    // (~25 KB) and the driver's stdout capture keeps a bounded TAIL, so
-    // BENCH_r10..r13 all landed as parsed:null. Timing methodology is
-    // unchanged — this only moves diagnostics off stdout into the side
-    // file (full precision, all fields), which is also the committed
-    // in-repo record the judge can diff per-query times from.
-    val qs3 = results.map { case (k, v) =>
-      "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v._1) }.mkString("{", ",", "}")
-    val jsonStdout = s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_failed":${failedNames.size},"failed":$failed,"contended":$contended,"queries":$qs3,"value":$total}"""
+    // The STDOUT line carries only scalars plus one subtotal per query
+    // family, with `value` printed dead last: the driver's stdout capture
+    // keeps about 2 KB of tail, and a line carrying all 334 per-query
+    // seconds (~8 KB) landed as parsed:null in every BENCH_r*.json.
+    // Timing methodology is unchanged — the per-query map, failure names
+    // and diagnostics live in the side file (full precision, all
+    // fields), the committed in-repo record per-query times diff from.
+    val byName = results.toMap
+    val famJson = SparkEntry.families.flatMap { case (fam, qs) =>
+      val ws = qs.flatMap(q => byName.get(q.name)).map(_._1)
+      if (ws.isEmpty) None
+      else Some("\"" + fam + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT,
+        ws.filter(_ >= 0).sum))
+    }.mkString("{", ",", "}")
+    val jsonStdout = s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_failed":${failedNames.size},"contended":$contended,"families":$famJson,"value":$total}"""
     // Belt and braces: persist the complete JSON where the judge can
     // read it even if the driver's stdout capture mangles the line —
     // but ONLY for the full sweep: a SPARK_GRAFT_ONLY iteration run
     // must not clobber the committed full-surface artifact.
-    if (only.isEmpty) {
+    if (SparkEntry.only.isEmpty) {
       // working-directory-relative (overridable) — a hardcoded absolute
       // path breaks the artifact on any other checkout location
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
@@ -198,7 +173,7 @@ object Bench {
     // diagnostics still reach the console, on stderr where they cannot
     // truncate the contract line
     System.err.println(s"[bench] diagnostics: $sentinel," +
-      s""""rerun_min2":$rerunJson""")
+      s""""failed":$failed,"rerun_min2":$rerunJson""")
     println(jsonStdout)
     spark.stop()
   }

@@ -11,12 +11,10 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump for local iteration;
-    // the driver leaves it unset and dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    // SPARK_GRAFT_ONLY restricts the dump for local iteration; the
+    // driver leaves it unset and dumps everything.
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => SparkEntry.isSelected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

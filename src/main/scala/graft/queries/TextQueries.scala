@@ -421,7 +421,8 @@ object TextQueries {
       import graft.operators.Bucketing
       // corpus capped at 1k docs: the query's job is the LIFECYCLE
       // (build → append → compact → probe, three table-write cycles);
-      // the build-cost scale slope is ScaleSweep bm25_build's job
+      // the build-cost scale slope is q_bm25_indexed's, whose index
+      // covers the whole corpus (ScaleSweep skips this capped query)
       val docs = table(s, dir, "documents").select("doc_id", "text")
         .where(col("doc_id") < 1000)
       TextAnalysis.buildBm25Index(docs.where(col("doc_id") < 300),

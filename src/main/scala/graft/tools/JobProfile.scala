@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-JOB wall-clock breakdown of one SparkEntry query — the
   * measurement instrument for telling "many tiny jobs" (harness/job
@@ -8,14 +9,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * stage" (real operator cost). Guide §1: decide whether the time is
   * scheduler/jobs or compute BEFORE touching the code.
   *
-  * Run: `sbt "runMain graft.tools.JobProfile q_node2vec [sfDir] [reps]"`.
+  * Run: `sbt "runMain graft.tools.JobProfile q_node2vec[,dedup,…] [sfDir] [reps]"`
+  * (query or family names, as `SPARK_GRAFT_ONLY` takes them).
   * Prints, after a warm-up rep, one line per job (duration, #stages,
   * #tasks, task-time sum, callsite) plus a total and the gap between
   * wall and Σjobs (driver-side planning/IO between jobs).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: JobProfile <q1[,q2,...]> [sfDir] [reps]")
+    require(args.nonEmpty, "usage: JobProfile <query_or_family[,…]> [sfDir] [reps]")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -27,10 +29,21 @@ object JobProfile {
     final case class Job(id: Int, start: Long, var end: Long = -1L,
                          site: String)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execSites.put(x.executionId, x.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
+        // `callSite.short` is unset on these jobs, and AQE submits most
+        // of them from a thread pool whose frames name no caller: take
+        // the call site of the SQL execution the job runs for, else the
+        // name of its result stage (named after the job's call site)
         val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execSites.get(id.toLong)))
+          .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?")
         jobs.put(e.jobId, Job(e.jobId, e.time, site = site))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
@@ -38,7 +51,7 @@ object JobProfile {
       }
     }
 
-    val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
+    val names = graft.SparkEntry.select(args(0))
     names.foreach { name =>
       val q = graft.SparkEntry.queries(name)
       // warm-up rep: JVM/codegen/file-listing costs land here

@@ -1,928 +1,153 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
+import java.time.Duration
+import scala.util.Using
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
-import graft.operators.{AsOfJoin, Dedup, Sampling, Similarity, SkewJoin, TextAnalysis}
+import graft.SparkEntry
 
-/** Scale-slope harness for the dedup/similarity family: runs each
-  * operator at 1×/2×/5×/10× the sf0.1 corpus (10× ≈ the sf1 tier, which
-  * the driver does not generate) and prints one JSON line of wall
-  * seconds per (operator, scale) so BASELINE.md can record whether the
-  * slopes stay ~linear and the occupancy cap holds.
+/** Scale-slope harness over the query registry: for each scale k it
+  * writes a k× copy of the testdata directory ([[writeScaled]]), runs
+  * the selected registry queries against it exactly as Bench does (one
+  * [[BoxSentinel.timedNoop]] each) and prints one JSON line of
+  * seconds, GC seconds and peak heap MB per (query, scale), plus the
+  * [[Skipped]] queries with their reasons.
   *
-  * The scaled corpora are synthesized WITHOUT planting cross-copy
-  * near-duplicates (which would make every LSH family legitimately
-  * quadratic in the copy count and measure the corpus, not the
-  * operator): each text copy goes through a distinct alphabet
-  * substitution cipher (word/length statistics preserved, shingle sets
-  * disjoint across copies), and each embedding copy through a distinct
-  * deterministic sign-flip pattern (norms preserved, cosines
-  * decorrelated).
+  * The copies add work without planting cross-copy near-duplicates
+  * (which would make every LSH family legitimately quadratic in the
+  * copy count and measure the corpus, not the operator): each text copy
+  * goes through its own alphabet rotation (word/length statistics
+  * preserved, shingle sets disjoint across copies), and each embedding
+  * copy through its own deterministic sign-flip pattern (norms
+  * preserved, cosines decorrelated).
   *
-  * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.tools.ScaleSweep"
+  * Run: `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_SWEEP_SCALES=1,5,10
+  * SPARK_GRAFT_ONLY=dedup sbt "runMain graft.tools.ScaleSweep"`
   */
 object ScaleSweep {
+
+  /** Queries a scaled directory cannot measure, with the reason: their
+    * slope would be flat or would measure the replication, not the
+    * operator. */
+  val Skipped: Map[String, String] = {
+    def capped(n: Int) = s"builder caps the corpus at id < $n, so copies >= 1 are filtered away"
+    val partOnly = "reads only part, which is linked, not replicated"
+    Map(
+      "q_edit_pairs" -> capped(100), "q_spans" -> capped(100),
+      "q_dedup_pipeline" -> capped(150), "q_dedup_provenance" -> capped(150),
+      "q_fuzzy_linkage" -> partOnly, "q_entities" -> partOnly,
+      "q_bm25_compact" -> capped(1000), "q_bm25_delete" -> capped(1000),
+      "q_image_dedup2" -> capped(120), "q_image_index" -> capped(100),
+      "q_image_clusters" -> capped(60), "q_stream_image" -> capped(60))
+  }
+
+  /** The tables [[writeScaled]] replicates; every other table is linked. */
+  val Replicated: Seq[String] = Seq("documents", "embeddings", "events")
+
+  private val Alpha = "abcdefghijklmnopqrstuvwxyz"
+
+  /** Writes the k× testdata directory `outDir` from `srcDir`. Copy i of
+    * `documents`, `embeddings` and `events` shifts its ids by i·10⁷
+    * (`event_id` by i·10⁹); `documents.text` is rotated by i letters,
+    * `embeddings.embedding` multiplied by a per-copy sign pattern, and
+    * `events.ts` jittered by i µs (less than any gap or period under
+    * test, so orderings inside a key stay realistic). Every column and
+    * type is kept. The other tables are symlinked. Rotations repeat
+    * after 26 copies, so k is at most 26. */
+  def writeScaled(spark: SparkSession, srcDir: String, k: Int, outDir: String): Unit = {
+    require(k >= 1 && k <= 26, s"scale $k outside 1..26 (the text rotations repeat)")
+    def replicate(name: String)(copy: (DataFrame, Int) => DataFrame): Unit = {
+      val src = spark.read.parquet(s"$srcDir/$name.parquet")
+      (0 until k).map(copy(src, _)).reduce(_ unionAll _)
+        .select(src.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+        .write.parquet(s"$outDir/$name.parquet")
+    }
+    def shift(c: String, by: Long) = col(c) + lit(by)
+    replicate("documents") { (d, i) =>
+      d.withColumn("doc_id", shift("doc_id", i * 10000000L))
+        .withColumn("text", translate(col("text"), Alpha,
+          Alpha.drop(i) + Alpha.take(i)))
+    }
+    replicate("embeddings") { (e, i) =>
+      // flips ~half the dims, so copies of one vector have near-zero
+      // pairwise cosine
+      val signs = Seq.tabulate(64)(j =>
+        if (((j * 2654435761L + i * 40503L) & 4L) == 0L) 1.0f else -1.0f)
+      e.withColumn("vec_id", shift("vec_id", i * 10000000L))
+        .withColumn("embedding",
+          zip_with(col("embedding"), typedlit(signs), (x, s) => x * s))
+    }
+    replicate("events") { (ev, i) =>
+      val ts = ev.schema("ts").dataType match {
+        case TimestampType | TimestampNTZType => col("ts") + lit(Duration.ofNanos(i * 1000L))
+        case _ => shift("ts", i * 1000L) // the epoch-ns vintage
+      }
+      ev.withColumn("user_id", shift("user_id", i * 10000000L))
+        .withColumn("event_id", shift("event_id", i * 1000000000L))
+        .withColumn("ts", ts)
+    }
+    Using.resource(Files.list(Paths.get(srcDir)))(_.toArray(n => new Array[Path](n)))
+      .filterNot(p => Replicated.exists(t => p.getFileName.toString == s"$t.parquet"))
+      .foreach(p => Files.createSymbolicLink(Paths.get(outDir, p.getFileName.toString),
+        p.toAbsolutePath))
+  }
+
+  /** Deletes a tree without following its symlinks. */
+  def deleteTree(root: Path): Unit =
+    Using.resource(Files.walk(root))(_.toArray(n => new Array[Path](n)))
+      .reverse.foreach(Files.delete)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // e.g. SPARK_GRAFT_SWEEP_SCALES=1,10,20 (20× sf0.1 ≈ the sf2 tier)
+    val scales = sys.env.get("SPARK_GRAFT_SWEEP_SCALES")
+      .map(_.split(',').map(_.trim.toInt).toSeq).getOrElse(Seq(1, 2, 5, 10))
+    val (skipped, run) = SparkEntry.all.filter(q => SparkEntry.isSelected(q.name))
+      .partition(q => Skipped.contains(q.name))
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-
-    val ev0 = graft.streaming.GraftStreaming.normalizeTs(
-      spark.read.parquet(s"$sfDir/events.parquet"))
-      .select("user_id", "event_id", "event_type", "ts", "value")
-
-    val alpha = "abcdefghijklmnopqrstuvwxyz"
-    def docsAt(k: Int): DataFrame =
-      (0 until k).map { i =>
-        val rot = alpha.drop(i % 26) + alpha.take(i % 26)
-        docs0.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-          translate(col("text"), alpha, rot).as("text"))
-      }.reduce(_ unionAll _)
-
-    def embAt(k: Int): DataFrame =
-      (0 until k).map { i =>
-        // deterministic per-copy sign pattern: flips ~half the dims, so
-        // copies of one vector have near-zero pairwise cosine
-        val signs = Seq.tabulate(64)(j =>
-          if (((j * 2654435761L + i * 40503L) & 4L) == 0L) 1.0f else -1.0f)
-        emb0.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
-          zip_with(col("embedding"), typedlit(signs), (x, s) => x * s)
-            .as("embedding"))
-      }.reduce(_ unionAll _)
-
-    // events copies shift user_id (more keys, window partitions scale
-    // with data) and jitter ts by a per-copy offset smaller than any
-    // gap/period under test (orderings inside a key stay realistic)
-    def evAt(k: Int): DataFrame =
-      (0 until k).map { i =>
-        ev0.select((col("user_id") + lit(i * 10000000L)).as("user_id"),
-          (col("event_id") + lit(i * 1000000000L)).as("event_id"),
-          col("event_type"), (col("ts") + lit(i * 1000L)).as("ts"),
-          col("value"))
-      }.reduce(_ unionAll _)
-
-    // gc/peak-heap instrumentation per (operator, scale) point — the
-    // same telemetry Bench carries, so a sweep slope can be read next to
-    // its memory-pressure evidence (a "slope" that is really GC thrash
-    // at the top scale shows up as gc_sec exploding while wall creeps)
-    import scala.jdk.CollectionConverters._
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-    val heapPools = java.lang.management.ManagementFactory
-      .getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-    def gcMillis: Long = gcBeans.map(_.getCollectionTime).sum
-
-    def timed(f: => DataFrame): (Double, Double, Double) = {
-      heapPools.foreach(_.resetPeakUsage())
-      val g0 = gcMillis
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      ((sec, (gcMillis - g0) / 1e3,
-        heapPools.map(_.getPeakUsage.getUsed).sum / 1e6))
-    }
-    def time(f: => DataFrame): Double = timed(f)._1
-
-    // warmup both base tables + codegen
-    time(Dedup.exactText(docs0, "text", "doc_id"))
-    time(Dedup.embeddingNearDup(emb0, "vec_id", "embedding"))
-
     val (jvms0, load0) = (BoxSentinel.jvmCount(), BoxSentinel.loadAvg())
-    // SPARK_GRAFT_SWEEP_SCALES=1,2,5,10,20 overrides for extended-scale
-    // evidence runs (20× sf0.1 ≈ the sf2 tier)
-    val scales = sys.env.get("SPARK_GRAFT_SWEEP_SCALES")
-      .map(_.split(',').map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(1, 2, 5, 10))
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val gcResults = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    val peakResults = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // SPARK_GRAFT_SWEEP_ONLY=a,b restricts to named sweeps for iteration
-    val only = sys.env.get("SPARK_GRAFT_SWEEP_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    def sweep(name: String)(f: Int => DataFrame): Unit = {
-      if (!only.forall(_.contains(name))) return
-      val pts = scales.map { k =>
-        val (s, g, p) = timed(f(k))
-        System.err.println(
-          f"[scale] $name%-18s ${k}%2dx  $s%7.2f s  gc $g%5.2f s  peak $p%6.0f MB")
-        (s, g, p)
-      }
-      results(name) = pts.map(_._1)
-      gcResults(name) = pts.map(_._2)
-      peakResults(name) = pts.map(_._3)
+
+    // warmup: every query once on the source directory, so JVM startup
+    // and each plan's first codegen are not billed to its 1× point
+    run.foreach(q => BoxSentinel.timedNoop("scale", q.name)(q.build(spark, sfDir)))
+    val byScale = scales.map { k =>
+      val dir = Files.createTempDirectory(s"graft-scale-${k}x-")
+      try {
+        writeScaled(spark, sfDir, k, dir.toString)
+        run.map { q =>
+          val p @ (s, g, m) = BoxSentinel.timedNoop("scale", s"${q.name} ${k}x")(
+            q.build(spark, dir.toString))
+          System.err.println(
+            f"[scale] ${q.name}%-22s ${k}%2dx  $s%7.2f s  gc $g%5.2f s  peak $m%6.0f MB")
+          p
+        }
+      } finally deleteTree(dir)
     }
-
-    sweep("minhash_pairs")(k => Dedup.minhashLshPairs(docsAt(k), "doc_id", "text",
-      numHashes = 64, bands = 32))
-    // the density-adaptive twin: tuneLshAdaptive re-solves (bands, rows)
-    // from the measured per-band collision mass at each scale, so the
-    // banding steepens as cipher-distinct copies densify the bucket
-    // space — the round-10 watch item's fix under test
-    sweep("minhash_adaptive")(k => {
-      val d = docsAt(k)
-      val plan = Dedup.tuneLshAdaptive(d, "doc_id", "text",
-        threshold = 0.5, minRecall = 0.95, maxHashes = 128,
-        candidateBudgetPerDoc = 2.0)
-      System.err.println(s"[scale] minhash_adaptive ${k}x plan: $plan")
-      Dedup.minhashLshPairs(d, "doc_id", "text",
-        numHashes = plan.numHashes, bands = plan.bands)
-    })
-    sweep("near_dup")(k => Dedup.nearDuplicates(docsAt(k), "doc_id", "text",
-      threshold = 0.8))
-    sweep("simhash")(k => Dedup.simhashNearDup(docsAt(k), "doc_id", "text",
-      maxHamming = 3))
-    sweep("jaccard_pairs")(k => Dedup.ngramJaccardPairs(docsAt(k), "doc_id", "text",
-      n = 3, threshold = 0.5))
-    sweep("emb_near_dup")(k => Dedup.embeddingNearDup(embAt(k), "vec_id", "embedding",
-      threshold = 0.95))
-    sweep("exact_pairs")(k => Dedup.exactTextPairs(docsAt(k), "text", "doc_id"))
-    // round-5 session-2 operators: spans (positional postings), line
-    // dedup (hub aggregate + reassembly), unigram LM (count + broadcast
-    // join), PQ ADC (codes-only corpus side), indexed near-dup probe
-    // (fixed 1x corpus index built once outside the timer; the BATCH
-    // scales — the incremental-ingest cost model under test)
-    sweep("repeated_spans")(k => Dedup.repeatedSpans(docsAt(k), "doc_id", "text",
-      minTokens = 8))
-    sweep("line_dedup")(k => Dedup.stripBoilerplateLines(
-      docsAt(k).select(col("doc_id"),
-        concat_ws("\n", substring(col("text"), 1, 60),
-          substring(col("text"), 61, 60),
-          when(col("doc_id") % 3 === 0, lit("Subscribe now")).otherwise(
-            substring(col("text"), 121, 60))).as("text")),
-      "doc_id", "text", maxDocs = 50))
-    sweep("unigram_lm")(k => {
-      val d = docsAt(k)
-      graft.operators.TextAnalysis.unigramScore(d, "doc_id", "text",
-        graft.operators.TextAnalysis.unigramModel(d, "text"))
-    })
-    sweep("pq_adc_topk")(k => Similarity.pqTopK(embAt(k), "vec_id", "embedding",
-      emb0.where(col("vec_id") < 20), "vec_id", "embedding", k = 10))
-    if (only.forall(_.contains("neardup_probe"))) {
-      Dedup.buildNearDupIndex(docs0, "doc_id", "text", "graft_sweep_idx",
-        buckets = 32)
-      sweep("neardup_probe")(k => Dedup.nearDupAgainstIndex(spark,
-        "graft_sweep_idx", docsAt(k), "doc_id", "text", threshold = 0.8))
-    }
-    // BM25 probe against the FIXED persisted index: the query batch
-    // scales, the index cost stays paid-at-ingest — the sparse twin of
-    // neardup_probe's incremental cost model
-    if (only.forall(_.contains("bm25_probe"))) {
-      graft.operators.TextAnalysis.buildBm25Index(docs0, "doc_id", "text",
-        "graft_sweep_bm25", buckets = 32)
-      sweep("bm25_probe")(k => graft.operators.TextAnalysis
-        .bm25AgainstIndex(spark, "graft_sweep_bm25",
-          docsAt(k).where(col("doc_id") % 10000000L < 20),
-          "doc_id", "text", topK = 10))
-    }
-    // the BUILD side of the persisted BM25 index: the pay-at-ingest
-    // cost whose slope must stay linear in corpus size — one corpus
-    // tokenize pass (doc length window-folded into the tf aggregate,
-    // df/stats derived from the stored postings)
-    if (only.forall(_.contains("bm25_build"))) {
-      sweep("bm25_build")(k => graft.operators.TextAnalysis
-        .buildBm25Index(docsAt(k), "doc_id", "text",
-          "graft_sweep_bm25b", buckets = 32))
-    }
-    // the APPEND+COMPACT side of the index lifecycle: a 1×-corpus base
-    // index takes a k-scaled ingest batch (shifted ids), then the
-    // small-file merge. Per-scale base tables are built OUTSIDE the
-    // timed region, so the slope is the incremental-ingest + compaction
-    // cost alone — the daily-reingest cost model, isolated from the
-    // one-time build that bm25_build already sweeps
-    if (only.forall(_.contains("bm25_compact"))) {
-      scales.foreach { k =>
-        graft.operators.TextAnalysis.buildBm25Index(docs0, "doc_id",
-          "text", s"graft_sweep_bm25c_$k", buckets = 32)
-      }
-      sweep("bm25_compact")(k => {
-        val batch = docsAt(k).select(
-          (col("doc_id") + lit(900000000L)).as("doc_id"), col("text"))
-        graft.operators.TextAnalysis.appendToBm25Index(batch, "doc_id",
-          "text", s"graft_sweep_bm25c_$k")
-        graft.operators.Bucketing.compactBucketed(spark,
-          s"graft_sweep_bm25c_$k")
-        spark.table(s"graft_sweep_bm25c_$k")
-      })
-    }
-    // round-5 session-3 operators: semantic dedup (cells from 64 seed
-    // centroids so E[m_c] tracks n/k; within-cell work is the quadratic
-    // under test) and temperature mixture (two aggregates + window keep)
-    sweep("semantic_dedup")(k => {
-      val e = embAt(k)
-      Dedup.semanticDedup(e, "vec_id", "embedding",
-        e.where(col("vec_id") < 64), "vec_id", "embedding",
-        threshold = 0.95)
-    })
-    sweep("temperature_mix")(k => {
-      val d = docsAt(k).withColumn("n_tokens",
-        graft.operators.TextAnalysis.tokenCount(col("text")).cast("long"))
-        .withColumn("lang", (col("doc_id") % 7).cast("string"))
-      graft.operators.Sampling.temperatureMixture(d, "lang", "doc_id",
-        "n_tokens", totalBudget = 100000L, alpha = 0.5)
-    })
-
-    // round-5 session-4 operators: heavy hitters (capacity-bounded
-    // sketch — the exchange is O(capacity) at every scale), vocabulary
-    // drift (two count aggregates + vocabulary-sized FOJ), hybrid RRF
-    // (fixed query set, candidate lists fixed per query — the corpus
-    // stream is what scales), leakage-safe split (CC over pair edges +
-    // zero-shuffle split projection), unicode normalize (pure per-row
-    // byte scan, ASCII fast path)
-    sweep("heavy_hitters")(k => TextAnalysis.heavyHitterTokens(
-      docsAt(k), "text", capacity = 4096, k = 20))
-    sweep("vocab_drift")(k => {
-      val d = docsAt(k)
-      TextAnalysis.vocabularyDrift(
-        d.where(pmod(col("doc_id"), lit(2)) === 0),
-        d.where(pmod(col("doc_id"), lit(2)) === 1), "text", topK = 100)
-    })
-    sweep("hybrid_topk")(k => {
-      val d = docsAt(k)
-      val e = embAt(k)
-      val corpus = d.join(e, d("doc_id") === e("vec_id"))
-        .select(d("doc_id"), col("text"), col("embedding"))
-      Similarity.hybridTopK(corpus, "doc_id", "embedding", "text",
-        corpus.where(col("doc_id") < 8), "doc_id", "embedding", "text",
-        k = 10, perSide = 20)
-    })
-    sweep("leak_split")(k => {
-      val d = docsAt(k)
-      Sampling.leakageSafeSplit(d.select("doc_id"), "doc_id",
-        Dedup.exactTextPairs(d, "text", "doc_id"), "id_l", "id_r",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-    })
-    sweep("unicode_norm")(k => docsAt(k).select(col("doc_id"),
-      graft.operators.TextAnalysis.unicodeNormalize(
-        concat(col("text"), lit(" café"))).as("n")))
-
-    // round-5 session-4b operators: bm25 (term-stat aggregates scan the
-    // corpus; the postings join prunes to term-sharing docs — with
-    // ciphered copies only copy 0 shares query terms, so the slope
-    // isolates the stats-building cost), hybrid bm25 (dense corpus
-    // stream + the above), boilerplate heavy hitters (shingle explode →
-    // capacity-bounded sketch; 10× pushes distinct shingles past the
-    // capacity, exercising decrement mode), auto skew join (MG pre-pass
-    // + differentially salted join under 70%-on-one-key skew)
-    sweep("bm25")(k => TextAnalysis.bm25(docsAt(k), "doc_id", "text",
-      docs0.where(col("doc_id") < 8), "doc_id", "text", topK = 10))
-    sweep("hybrid_bm25")(k => {
-      val d = docsAt(k)
-      val e = embAt(k)
-      val corpus = d.join(e, d("doc_id") === e("vec_id"))
-        .select(d("doc_id"), col("text"), col("embedding"))
-      Similarity.hybridTopKBm25(corpus, "doc_id", "embedding", "text",
-        corpus.where(col("doc_id") < 8), "doc_id", "embedding", "text",
-        k = 10, perSide = 20)
-    })
-    sweep("boilerplate")(k => TextAnalysis.heavyHitters(
-      docsAt(k).select(explode(Dedup.shingles(col("text"), 3)).as("__sh")),
-      col("__sh"), capacity = 65536, k = 20))
-    sweep("skew_join_auto")(k => {
-      val left = docsAt(k).select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(10)) < 7, lit(0L))
-          .otherwise(pmod(col("doc_id"), lit(1000))).as("k"))
-      val right = left.select("k").distinct()
-        .select(col("k"), (col("k") * 7).as("p"))
-      SkewJoin.saltedJoinAuto(left, right, "k",
-        factor = 8, hotThreshold = 1000L)
-    })
-
-    // round-5 session-5 operators: URL canonicalize + per-domain cap
-    // (narrow regex algebra, then ONE window shuffle keyed by ~1000
-    // domains), embedding centering (stats aggregate + broadcast
-    // zip_with), power iteration (2 matvec joins per pass — the slope
-    // isolates the exploded-relation shuffles), BPE pair counting (the
-    // corpus→vocab collapse is the only big aggregate; ciphered copies
-    // grow the vocab linearly, the honest worst case), z-order layout
-    // (one range exchange + sort)
-    sweep("url_domain_cap")(k => {
-      val u = concat(lit("HTTPS://WWW.site"),
-        pmod(col("doc_id"), lit(997)).cast("string"),
-        lit(".COM:443/p/"), col("doc_id").cast("string"),
-        lit("?utm_source=x&b=2&a=1#f"))
-      val t = docsAt(k).select(col("doc_id"),
-        graft.operators.UrlOps.normalizeUrl(u).as("url"))
-      graft.operators.UrlOps.perDomainCap(t, "url", "doc_id", cap = 50)
-    })
-    sweep("emb_center")(k =>
-      Similarity.centerVectors(embAt(k), "embedding", "c"))
-    sweep("power_iter")(k =>
-      Similarity.powerIteration(embAt(k), "vec_id", "embedding",
-        dim = 64, iters = 1))
-    // (power_iter is swept at iters=1 — per-pass cost; total is linear
-    // in iters by construction since the window normalizer keeps each
-    // iteration's subtree single-consumer)
-    // walk corpus on a graph whose NODE count scales with k (the bench
-    // query's 21-host web stays constant-size, so it cannot measure the
-    // frontier-join slope): ~10k·k nodes, 100k·k raw edges, one frontier
-    // join + min-struct aggregate per step
-    sweep("walks")(k => {
-      val nNodes = lit(10000L * k)
-      val e = evAt(k).select(
-        concat(lit("n"), pmod(col("event_id"), nNodes).cast("string"))
-          .as("src"),
-        concat(lit("n"), pmod(col("event_id") * 7 + col("user_id"), nNodes)
-          .cast("string")).as("dst"))
-      graft.operators.GraphOps.deterministicWalks(e, "src", "dst",
-        steps = 4, walksPerNode = 1)
-    })
-    // SGNS trainer slope on a k-scaled pair corpus (vocab AND pairs
-    // both grow with k): one iteration's three joins + three aggregates
-    // against the vocab-sized matrices — the per-iteration cost a
-    // 100 TB walk corpus pays times iters
-    sweep("sgns")(k => {
-      val nNodes = lit(2000L * k)
-      val p = evAt(k).select(
-        concat(lit("n"), pmod(col("event_id"), nNodes).cast("string"))
-          .as("a"),
-        concat(lit("n"), pmod(col("event_id") * 7 + col("user_id"), nNodes)
-          .cast("string")).as("b"))
-        .where(col("a") =!= col("b")).distinct()
-      graft.operators.Embedding.sgnsFit(p, "a", "b", dim = 4,
-        iters = 1, lr = 0.5, negs = 1)
-    })
-    // the round-12 weighted-negative path: same pair corpus as `sgns`,
-    // negatives drawn by the cell-decomposed unigram^0.75 inversion —
-    // the weight table, two-level prefix sums, and the cell equi-join
-    // are the added terms under test
-    sweep("sgns_w75")(k => {
-      val nNodes = lit(2000L * k)
-      val p = evAt(k).select(
-        concat(lit("n"), pmod(col("event_id"), nNodes).cast("string"))
-          .as("a"),
-        concat(lit("n"), pmod(col("event_id") * 7 + col("user_id"), nNodes)
-          .cast("string")).as("b"))
-        .where(col("a") =!= col("b")).distinct()
-      graft.operators.Embedding.sgnsFit(p, "a", "b", dim = 4,
-        iters = 1, lr = 0.5, negs = 1, negDist = "unigram75")
-    })
-    // PSL registered-domain grouping: three broadcast label-tail joins
-    // + one hash aggregate — the host stream must scale with ZERO
-    // shuffles before the final agg
-    sweep("psl_domains")(k => {
-      val h = graft.operators.UrlOps.syntheticPslHost(
-        col("event_id"), col("user_id"))
-      graft.operators.PublicSuffix.registeredDomainPsl(
-          evAt(k).select(h.as("host"), length(h).as("nc")), "host")
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("n_chars"))
-    })
-    // the round-12 REAL-codec image path: per-scale encoded corpora
-    // (PNG + JPEG twins of deterministic rasters) materialize OUTSIDE
-    // the timer — the fixture encode is itself a mapPartitions codec
-    // pass and would otherwise dominate — so the slope is decode →
-    // area-pooled luma grid → dHash → banded hamming alone, the one
-    // per-row kernel the decode rework added. Expected linear
-    // (mapPartitions-bounded, no shuffle before the pair aggregate).
-    if (only.forall(_.contains("image_decode"))) {
-      scales.foreach { k =>
-        val base = docsAt(k) // full corpus per copy: 2·5000·k images
-        val png = graft.operators.Multimodal.withEncodedImagePayload(
-          base, "text", "png", minPartitions = Some(cpus.toInt))
-        val jpg = graft.operators.Multimodal.withEncodedImagePayload(
-          base.select((col("doc_id") + 500000000L).as("doc_id"),
-            col("text")),
-          "text", "jpeg", minPartitions = Some(cpus.toInt))
-        graft.operators.Bucketing.dropForRewrite(spark, s"graft_sweep_img_$k")
-        png.unionByName(jpg).select("doc_id", "content")
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(s"graft_sweep_img_$k")
-      }
-      sweep("image_decode")(k => graft.operators.Multimodal.imageNearDup(
-        spark.table(s"graft_sweep_img_$k"), "doc_id", "content",
-        dim = 8, maxHamming = 3, minPartitions = Some(cpus.toInt)))
-    }
-    sweep("bpe_pairs")(k =>
-      TextAnalysis.bpeTopPairs(docsAt(k), "text", k = 40))
-    sweep("zorder_cluster")(k => graft.operators.ZOrder.clusterByZ(
-      docsAt(k).select(col("doc_id"),
-        pmod(col("doc_id"), lit(1024)).cast("int").as("x"),
-        pmod(length(col("text")), lit(1024)).cast("int").as("y")),
-      "x", "y", bits = 10, numPartitions = Some(32)))
-
-    // round-5 session-6 operators: hard negatives (fixed anchor batch
-    // broadcast; the corpus stream with its map-side label predicate is
-    // what scales, and the bounded-heap top-k keeps the shuffle at
-    // k·partitions per anchor), deterministic negative sampling (dense
-    // index build is the only corpus-sized step; draws are
-    // anchor-batch-sized), BPE vocab encoding (corpus collapses to the
-    // distinct-word table, the merge-replace chain runs there, then one
-    // join back — ciphered copies grow the vocab linearly, the honest
-    // worst case for the chain)
-    sweep("hard_negatives")(k => {
-      val e = embAt(k).withColumn("label", pmod(col("vec_id"), lit(10)))
-      Similarity.hardNegatives(e, "vec_id", "embedding", "label",
-        e.where(col("vec_id") < 8), "vec_id", "embedding", "label", k = 10)
-    })
-    sweep("neg_sample")(k => graft.operators.DetRandom.negativeSample(
-      embAt(k).select("vec_id"), "vec_id",
-      emb0.where(col("vec_id") < 64).select("vec_id"), "vec_id", k = 10))
-    sweep("bpe_encode")(k => TextAnalysis.bpeEncodeViaVocab(
-      docsAt(k), "doc_id", "text",
-      Seq("t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n", "e" -> "r",
-        "o" -> "n", "r" -> "e", "a" -> "t", "in" -> "g", "s" -> "t",
-        "an" -> "d", "o" -> "u")))
-
-    // round-6 temporal-analytics operators: EWMA (horizon lags in one
-    // window node — slope isolates the key shuffle), transitions (one
-    // window + |types|² agg), rolling actives (distinct-collapse + ×7
-    // explode on the collapsed relation), SCD2 (two window passes, one
-    // shuffle). All shuffles key on user_id, whose cardinality scales
-    // with the data (evAt shifts ids per copy).
-    import graft.operators.WindowOps
-    sweep("ewma")(k => WindowOps.ewmaBounded(evAt(k), Seq("user_id"),
-      Seq("ts", "event_id"), "value", alpha = 0.3, horizon = 8))
-    sweep("transitions")(k => WindowOps.transitionCounts(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "event_type"))
-    sweep("active_users")(k => WindowOps.rollingActiveUsers(evAt(k),
-      "user_id", "ts", period = 86400L * 1000000000L, windowPeriods = 7))
-    sweep("scd2")(k => WindowOps.scd2(evAt(k), Seq("user_id"),
-      Seq("ts", "event_id"), "ts", "event_type"))
-
-    // round-6 aggregation/decontamination operators: incr_agg (state
-    // aggregate + FULL OUTER monoid merge — both sides scale), hll_merge
-    // (per-shard sketches union in sketch-sized work), decontaminate
-    // (train scales, benchmark FIXED and broadcast — the slope isolates
-    // the map-side explode+join)
-    sweep("incr_agg")(k => {
-      val e = evAt(k)
-      graft.operators.Incremental.mergeState(
-        graft.operators.Incremental.aggregateState(
-          e.where(col("event_id") % 2 === 0), Seq("user_id"), "value"),
-        graft.operators.Incremental.aggregateState(
-          e.where(col("event_id") % 2 =!= 0), Seq("user_id"), "value"),
-        Seq("user_id"))
-    })
-    sweep("hll_merge")(k => {
-      val e = evAt(k).withColumn("day", expr("ts DIV 86400000000000"))
-      e.groupBy("event_type", "day")
-        .agg(hll_sketch_agg(col("user_id")).as("sk"))
-        .groupBy("event_type")
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx"))
-    })
-    sweep("decontaminate")(k => Dedup.decontaminationReport(
-      docsAt(k), "doc_id", "text",
-      docs0.where(col("doc_id") % 37 === 0), "doc_id", "text",
-      n = 8, minHits = 1L))
-
-    // round-7 operators: pagerank (node space scales with user_id —
-    // per-iteration join + groupBy both key on cardinality that grows
-    // with the data; 3 iterations), bigram_lm (model FIXED at 1× and
-    // broadcast; the slope isolates the corpus-side bigram explode +
-    // key-bounded joins — ciphered copies drive the OOV/backoff worst
-    // case), cm_freq (fixed 2048×4 counter array per partial — the
-    // exchange is O(width·depth) at every scale, like heavy_hitters)
-    sweep("pagerank")(k => {
-      val e = evAt(k).select(
-        concat(lit("h"), col("user_id").cast("string")).as("src"),
-        concat(lit("h"),
-          (col("user_id") + col("event_id") % 997).cast("string")).as("dst"),
-        lit(1L).as("w"))
-      graft.operators.GraphOps.pageRankNano(e, "src", "dst", col("w"), iters = 3)
-    })
-    sweep("bigram_lm")(k => TextAnalysis.stupidBackoffScore(
-      docsAt(k), docs0.select("text"), "doc_id", "text"))
-    sweep("cm_freq")(k => evAt(k)
-      .select(col("user_id").cast("string").as("u"))
-      .agg(graft.functions.CountMin(col("u")).as("sk")))
-
-    // round-7 session-2 operators: hits (two join+groupBy rounds per
-    // iteration, node space scales with user_id), lpa communities (one
-    // label join + per-node window argmax per round), triangles
-    // (degree-ordered wedge join — the arboricity bound is what's under
-    // test), pmi (two vocabulary-sized count aggregates; ciphered
-    // copies grow the vocabulary linearly, the honest worst case)
-    def graphAt(k: Int): DataFrame = evAt(k).select(
-      concat(lit("h"), col("user_id").cast("string")).as("src"),
-      concat(lit("h"),
-        (col("user_id") + col("event_id") % 997).cast("string")).as("dst"),
-      lit(1L).as("w"))
-    sweep("hits")(k => graft.operators.GraphOps.hitsNano(
-      graphAt(k), "src", "dst", col("w"), iters = 3))
-    sweep("lpa")(k => graft.operators.GraphOps.labelPropagation(
-      graphAt(k), "src", "dst", col("w"), iters = 3))
-    sweep("triangles")(k => graft.operators.GraphOps.triangleCounts(
-      graphAt(k), "src", "dst"))
-    sweep("pmi")(k => TextAnalysis.pmiBigrams(docsAt(k), "text", minCount = 5))
-    // kcore (two semi-joins + degree agg per peel round, 3 rounds),
-    // psi (two bin-count aggregates — the exchange is O(bins) at any
-    // scale), paths3 (one window shuffle on user_id + |types|³ agg)
-    sweep("kcore")(k => graft.operators.GraphOps.kCore(
-      graphAt(k), "src", "dst", k = 3, rounds = 3))
-    sweep("psi")(k => {
-      val d = evAt(k).select((col("event_id") % 1000).as("v"))
-      graft.operators.Drift.psiFixedBins(
-        d.where(col("v") % 2 === 0), d.where(col("v") % 2 =!= 0),
-        "v", lo = 0L, hi = 1000L, bins = 20)
-    })
-    sweep("paths3")(k => graft.operators.WindowOps.pathTripleCounts(
-      evAt(k), Seq("user_id"), Seq("ts", "event_id"), "event_type"))
-    // ks (same O(bins) exchanges as psi, zero quantization), seasonal
-    // (one <=phases-row aggregate + broadcast join-back), textrank
-    // (bigram-count aggregate feeds the integer PageRank recursion —
-    // ciphered copies grow the word graph's node space linearly)
-    sweep("ks")(k => {
-      val d = evAt(k).select((col("event_id") % 1000).as("v"))
-      graft.operators.Drift.ksFixedBins(
-        d.where(col("v") % 2 === 0), d.where(col("v") % 2 =!= 0),
-        "v", lo = 0L, hi = 1000L, bins = 20)
-    })
-    sweep("seasonal")(k => graft.operators.WindowOps.seasonalDecompose(
-      evAt(k), "event_id", "ts", "value",
-      period = 3600L * 1000000000L, phases = 24))
-    // covisit: the md5 cap bounds each key to C(10,2) pairs, so the
-    // self-join fan-out scales with keys, not with per-key degree —
-    // the slope under test IS the cap
-    sweep("covisit")(k => graft.operators.GraphOps.coVisitation(
-      evAt(k).select(col("user_id"),
-        (col("event_id") % 997).cast("string").as("item")),
-      "user_id", "item", maxPerKey = 10))
-    // validate: all scalar rules in ONE scan (conditional sums inside a
-    // single aggregate); the unique rule adds one user_id-keyed groupBy
-    sweep("validate")(k => {
-      import graft.operators.Validate._
-      check(evAt(k), Seq(
-        NotNull("value"), InRange("value", 0, 500),
-        InSet("event_type", Seq("click", "view", "purchase")),
-        Unique("event_id")))
-    })
-    sweep("textrank")(k => {
-      val big = TextAnalysis.bigramCounts(docsAt(k), "text")
-        .select(col("w1").as("src"), col("w2").as("dst"),
-          col("pair_cnt").as("w"))
-      graft.operators.GraphOps.pageRankNano(big, "src", "dst", col("w"),
-        iters = 3)
-    })
-
-    // round-7 session-2 operators: fuzzy_linkage (blocked JW pairs —
-    // ciphered copies grow the name dictionary AND block space linearly,
-    // per-block size stays put, so the bounded-pair machinery's slope is
-    // what's under test), interarrival (one key window + |types| agg),
-    // attribution (key window + refinement window, both user-keyed),
-    // survival (corpus collapses to the per-user life table, then
-    // model-sized windows), outliers (three |groups|-sized aggregates +
-    // broadcast join-backs — the 3-scan cost model), calibration (ONE
-    // map-side-combined aggregate to <= bins rows), fd (per-pair
-    // lhs-keyed aggregates; event_id's cardinality scales with data)
-    sweep("fuzzy_linkage")(k => Dedup.fuzzyLinkage(
-      docsAt(k).select(col("doc_id"), substring(col("text"), 1, 24).as("nm")),
-      "doc_id", "nm", substring(col("nm"), 1, 4), threshold = 0.85))
-    sweep("interarrival")(k => WindowOps.interArrivalStats(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "event_type", "ts"))
-    sweep("attribution")(k => WindowOps.attribution(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "event_type", "purchase"))
-    sweep("survival")(k => {
-      val life = evAt(k).groupBy("user_id")
-        .agg(min("ts").as("f"), max("ts").as("l"))
-      val h = life.agg(max("l").as("__h"))
-      WindowOps.kaplanMeier(life.crossJoin(broadcast(h))
-        .select(expr("(l - f) DIV 3600000000000").as("t"),
-          when(col("__h") - col("l") >= 86400000000000L, 1L)
-            .otherwise(0L).as("ev")), "t", "ev")
-    })
-    sweep("outliers")(k => graft.operators.Profile.robustOutliers(
-      evAt(k), Seq("event_type"), "value", k = 3.0))
-    sweep("calibration")(k => graft.operators.Profile.calibrationReport(
-      evAt(k).select(((col("event_id") % 1000).cast("double") / 1000.0)
-          .as("score"), (col("value") > 250.0).as("label")),
-      "score", "label", bins = 10))
-    sweep("fd")(k => graft.operators.Profile.functionalDeps(evAt(k),
-      Seq(("event_id", "user_id"), ("user_id", "event_type"))))
-    // asof_nearest: both sides scale; ONE key shuffle + shared-sort
-    // window frames. resample: one SortAggregate exchange collapsing to
-    // |types × hours| bars regardless of row count
-    sweep("asof_nearest")(k => {
-      val e = evAt(k)
-      AsOfJoin.asof(e.where(col("event_type") === "click"),
-        e.where(col("event_type") === "purchase")
-          .groupBy("user_id", "ts").agg(max("value").as("value")),
-        Seq("user_id"), "ts", "ts", Seq("value"), direction = "nearest",
-        tolerance = Some(3600L * 1000000000L))
-    })
-    sweep("resample")(k => WindowOps.resampleOhlc(evAt(k),
-      Seq("event_type"), "ts", "value", period = 3600L * 1000000000L,
-      tieBreak = Seq("event_id")))
-    // interval_join: both span sets scale with the corpus; the
-    // bucketized equi-join shuffles on (user, bucket) and the
-    // overlap-start rule keeps the plan DISTINCT-free
-    sweep("interval_join")(k => {
-      val halfHourNs = 1800L * 1000000000L
-      val e = evAt(k)
-      def spans(t: String, p: String) = e.where(col("event_type") === t)
-        .select(col("user_id"), col("event_id").as(s"id_$p"),
-          col("ts").as(s"s_$p"), (col("ts") + halfHourNs).as(s"e_$p"))
-      graft.operators.RangeJoin.intervalOverlap(
-        spans("purchase", "a"), spans("error", "b"), Seq("user_id"),
-        "s_a", "e_a", "s_b", "e_b", bucketWidth = halfHourNs)
-    })
-    // round-7 session-5 operators: cusum (one key exchange + one sort,
-    // two stacked Window passes), rolling_corr (lag + six fused moments
-    // over one frame), cdc (latestByKey groupBy + map-side tombstone
-    // filter), gains (one percentile aggregate + broadcast band
-    // assignment), pii (map-only regex scan; doc corpus scales)
-    sweep("cusum")(k => WindowOps.cusum(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "value",
-      target = 165.0, slack = 20.0, threshold = 500.0))
-    sweep("rolling_corr")(k => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts", "event_id")
-      WindowOps.rollingCorr(
-        evAt(k).withColumn("y", lag(col("value"), 1).over(w)),
-        Seq("user_id"), Seq("ts", "event_id"), "value", "y", window = 20)
-    })
-    sweep("cdc")(k => {
-      val base = evAt(k)
-        .select(col("event_id"), col("ts"), col("value"), lit("I").as("op"))
-      val upd = base.where(col("event_id") % 10 === 0)
-        .select(col("event_id"), (col("ts") + 1000L).as("ts"),
-          (col("value") * 2).as("value"), lit("U").as("op"))
-      val del = base.where(col("event_id") % 20 === 0)
-        .select(col("event_id"), (col("ts") + 2000L).as("ts"),
-          lit(0.0).as("value"), lit("D").as("op"))
-      Dedup.applyChangelog(base.unionAll(upd).unionAll(del),
-        Seq("event_id"), Seq("ts"), "op")
-    })
-    sweep("gains")(k => graft.operators.Profile.gainsTable(
-      evAt(k).select(((col("event_id") % 1000).cast("double") / 1000.0)
-          .as("score"), (col("value") > 250.0).as("label")),
-      "score", "label", buckets = 10))
-    sweep("pii")(k => TextAnalysis.piiReport(docsAt(k), "doc_id", "text"))
-    sweep("cross_spans")(k => Dedup.crossSpans(docsAt(k), "doc_id", "text",
-      docs0.where(col("doc_id") % 37 === 0)
-        .select((col("doc_id") + 500000L).as("eval_id"), col("text")),
-      "eval_id", "text", minTokens = 8))
-    sweep("covisit_lift")(k => {
-      val e = evAt(k)
-      graft.operators.GraphOps.coVisitationLift(
-        e.select(col("user_id"), (col("event_id") % 97).as("item")),
-        "user_id", "item", maxPerKey = 10, minSupport = 2L)
-    })
-
-    // round-7 session-7 operators: kanon report (one grouped agg on the
-    // quasi key), kanon suppress (class agg + AQE-broadcast join-back —
-    // deliberately NOT a window, whose |classes| partitions would cap
-    // parallelism at the handful of demographic buckets under audit),
-    // wilson/woe (|groups|-sized aggregates), target_encode (grouped
-    // integer sums + null-safe category join-back), ref_integrity
-    // (dim-distinct + one left join + single agg; the FK side scales),
-    // margin_pairs (fixed A-side query batch, B corpus scales — the
-    // candidate-rescoring cost model; brute top-k is the oracle face,
-    // ANN candidates the 100 TB face), datasheet (global agg +
-    // fingerprint-grouped dup mass, two passes over one projection),
-    // sample_bottomk (prefix-machinery per-key sample — bucketed, not
-    // |keys|-partitioned)
-    sweep("kanon")(k => {
-      val e = evAt(k).withColumn("vb", floor(col("value") / 100).cast("long"))
-      graft.operators.Privacy.kAnonymityReport(e, Seq("event_type", "vb"),
-        Some("user_id"), 50, 20)
-    })
-    sweep("kanon_suppress")(k => graft.operators.Privacy.suppressBelowK(
-      evAt(k).withColumn("vb", floor(col("value") / 100).cast("long")),
-      Seq("event_type", "vb"), 50))
-    sweep("wilson")(k => graft.operators.Profile.wilsonRates(
-      evAt(k).withColumn("success", col("value") >= 100.0),
-      Seq("event_type"), "success"))
-    sweep("woe")(k => graft.operators.FeatureEng.woeTable(
-      evAt(k).withColumn("cat", floor(col("value") / 50).cast("long"))
-        .withColumn("label", col("event_type") === "click"),
-      "cat", "label"))
-    sweep("target_encode")(k => graft.operators.FeatureEng.targetEncode(
-      evAt(k).withColumn("label", col("value") >= 100.0),
-      "event_type", "label", m = 10.0))
-    sweep("ref_integrity")(k => graft.operators.Validate.referentialIntegrity(
-      evAt(k), "user_id", ev0.select(col("user_id").as("pk")), "pk"))
-    sweep("margin_pairs")(k => Similarity.marginPairs(
-      emb0.where(col("vec_id") < 32), embAt(k), "vec_id", "embedding",
-      k = 4, threshold = 1.0))
-    sweep("datasheet")(k => {
-      val base = docsAt(k).select(
-        (col("doc_id") % 7).cast("string").as("lang"),
-        length(col("text")).as("n_chars"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("tk"),
-        TextAnalysis.fingerprint(col("text")).as("fp"))
-      val core = base.agg(count(lit(1)).cast("double").as("n_docs"),
-        countDistinct(col("lang")).cast("double").as("n_langs"),
-        sum(col("tk")).cast("double").as("total_tokens"),
-        expr("percentile(n_chars, 0.5D)").as("p50_chars"))
-      val dup = base.groupBy("fp").agg(count(lit(1)).as("c"))
-        .agg(((sum(col("c")) - count(lit(1))).cast("double") /
-          sum(col("c")).cast("double")).as("dup_rate"))
-      core.crossJoin(broadcast(dup))
-    })
-    sweep("sample_bottomk")(k => Sampling.perKey(
-      evAt(k), Seq("user_id"), "event_id", n = 3))
-    sweep("incr_hist")(k => {
-      val ev = evAt(k)
-      val (lo, hi, bins) = (0.0, 500.0, 50)
-      val snap = graft.operators.Incremental.aggregateHistState(
-        ev.where(col("event_id") % 5 =!= 0), Seq("event_type"), "value",
-        lo, hi, bins)
-      val delta = graft.operators.Incremental.aggregateHistState(
-        ev.where(col("event_id") % 5 === 0), Seq("event_type"), "value",
-        lo, hi, bins)
-      graft.operators.Incremental.histQuantiles(
-        graft.operators.Incremental.mergeHistState(snap, delta,
-          Seq("event_type")),
-        Seq("event_type"), Seq("p50" -> 0.5, "p90" -> 0.9), lo, hi, bins)
-    })
-
-    // round-9 evaluation-metric family: auc (corpus collapses to the
-    // distinct-score relation — 1000 scores at every scale, the window
-    // is constant-size), ranking (query space scales with user_id,
-    // per-query doc counts stay put — the one-exchange-two-sorts cost
-    // model), kappa (cell/label relations are |event_type|²-sized at
-    // every scale), rouge (pairs scale linearly; gram counts never
-    // cross pairs, so the (pair, gram) exchange is corpus-linear)
-    sweep("auc")(k => graft.operators.Eval.aucRoc(
-      evAt(k).select(((col("event_id") % 1000).cast("double") / 1000.0)
-          .as("score"), (col("value") > 250.0).as("label")),
-      "score", "label"))
-    sweep("ranking")(k => graft.operators.Eval.rankingMetrics(
-      evAt(k).select(col("user_id").as("q"), col("event_id").as("d"),
-        col("value").as("sc"),
-        when(col("event_type") === "click", 1L).otherwise(0L).as("rel")),
-      "q", "d", "sc", "rel", k = 10))
-    sweep("kappa")(k => graft.operators.Eval.cohenKappa(
-      evAt(k).select(col("event_type").as("a"),
-        when(col("event_id") % 5 === 0, lit("click"))
-          .otherwise(col("event_type")).as("b")),
-      "a", "b"))
-    sweep("rouge")(k => {
-      val d = docsAt(k)
-      graft.operators.Eval.rougeN(
-        d.where(col("doc_id") % 10 === 0)
-          .select(col("doc_id").as("id"), col("text").as("cand"))
-          .join(d.select((col("doc_id") - 1).as("id"),
-            col("text").as("ref")), "id"),
-        "id", "cand", "ref", n = 2)
-    })
-    // pr_auc shares auc's collapse shape (1000 distinct scores at any
-    // scale); bleu is rouge × 4 n-gram widths on the (pair, gram) key
-    sweep("pr_auc")(k => graft.operators.Eval.prAuc(
-      evAt(k).select(((col("event_id") % 1000).cast("double") / 1000.0)
-          .as("score"), (col("value") > 250.0).as("label")),
-      "score", "label"))
-    // nb: model FIXED (trained on the 1x corpus outside the scaled
-    // part); the slope isolates the |labels|x token-stream scoring join
-    // + (doc, label) aggregate
-    sweep("nb")(k => {
-      val tr = docs0.select((col("doc_id") % 7).cast("string").as("label"),
-        col("text"))
-      val model = TextAnalysis.nbTrain(tr, "label", "text")
-      TextAnalysis.nbClassify(docsAt(k), "doc_id", "text", model)
-    })
-    sweep("chi2_tokens")(k => TextAnalysis.chiSquareTokens(
-      docsAt(k).select(col("doc_id"),
-        (col("doc_id") % 7).cast("string").as("label"), col("text")),
-      "doc_id", "label", "text"))
-    sweep("jsd")(k => {
-      val d = docsAt(k)
-      TextAnalysis.jsDivergence(d.where(col("doc_id") % 2 === 0),
-        d.where(col("doc_id") % 2 === 1))
-    })
-    // items scale with the data (event_id shifts per copy), ~7 ratings
-    // per item so the balancing window and the drop path both exercise
-    sweep("fleiss")(k => graft.operators.Eval.fleissKappa(
-      evAt(k).select(floor(col("event_id") / 7).as("item"),
-        col("event_type"), col("event_id")),
-      "item", "event_type", "event_id", n = 5))
-    // centroids FIXED (k=8 from the 1x table); slope isolates the
-    // broadcast cross + one point-key aggregate
-    sweep("silhouette")(k => Similarity.simplifiedSilhouette(
-      embAt(k), "vec_id", "embedding",
-      emb0.where(col("vec_id") < 8), "vec_id", "embedding"))
-    // fixed 3 GD iterations; slope isolates the per-iteration corpus
-    // scan + 66-accumulator aggregate (model hops as one-row broadcast)
-    sweep("logreg")(k => graft.operators.LinearModel.logisticFit(
-      embAt(k).select(col("embedding"),
-        (col("vec_id") % 2).cast("int").as("y")),
-      "embedding", "y", dim = 64, iters = 3, lr = 0.5))
-    def scoredEv(k: Int) = evAt(k)
-      .select(col("event_id"),
-        ((col("event_id") % 1000).cast("double") / 1000.0).as("score"),
-        (col("value") > 250.0).as("label"))
-    sweep("conformal")(k => graft.operators.Eval.splitConformal(
-      scoredEv(k).where(col("event_id") % 2 === 0),
-      scoredEv(k).where(col("event_id") % 2 === 1),
-      "score", "label", alpha = 0.1))
-    sweep("label_errors")(k => graft.operators.Eval.confidentJointBinary(
-      scoredEv(k), "score", "label"))
-    // KN model FIXED (trained on the 1x corpus); slope isolates the
-    // posting joins + per-doc fold over the scaled score stream
-    sweep("kn_lm")(k => TextAnalysis.kneserNeyScore(
-      docsAt(k), docs0.select(col("text")), "doc_id", "text"))
-    sweep("neyman")(k => Sampling.neymanSample(
-      evAt(k).select(col("event_type"), col("event_id"), col("value")),
-      "event_type", "value", "event_id", budget = 600L))
-    // sparse text classifier, fixed 4 iterations: featurize + train
-    // run EAGERLY inside the thunk (driver model hops), the returned
-    // confusion is the only lazy part — wall time covers the pipeline
-    sweep("text_lr")(k => {
-      val d = docsAt(k)
-      val pairs = TextAnalysis.hashedTfPairs(d, "doc_id", "text", 256)
-        .join(d.select(col("doc_id"),
-          array_contains(TextAnalysis.tokens(col("text")), "spark")
-            .cast("int").as("y")), "doc_id")
-      val w = graft.operators.LinearModel.logisticFitSparse(pairs,
-        "doc_id", "pos", "x", "y", dim = 256, iters = 4, lr = 1.0)
-      graft.operators.LinearModel.logisticConfusionSparse(pairs,
-        "doc_id", "pos", "x", "y", w)
-    })
-    sweep("bleu")(k => {
-      val d = docsAt(k)
-      graft.operators.Eval.bleuCorpus(
-        d.where(col("doc_id") % 10 === 0)
-          .select(col("doc_id").as("id"),
-            substring(col("text"), 1, 120).as("cand"),
-            col("text").as("ref")),
-        "id", "cand", "ref", maxN = 4)
-    })
-
-    // round-9 session-3 families
-    sweep("tree")(k => graft.operators.TreeModel.treeFit(
-      embAt(k).select(col("embedding"),
-        (col("vec_id") % 2).cast("int").as("y")),
-      "embedding", "y", nFeatures = 8, bins = 16, lo = -0.5, hi = 0.5,
-      depth = 2, minLeaf = 5L))
-    // copies shift by +10·i in x: disjoint grid regions, so DENSITY is
-    // constant and the slope measures the operator, not a thickening
-    // eps-ball (same rationale as the cipher/sign-flip corpora)
-    sweep("dbscan")(k => graft.operators.Density.dbscanRoles(
-      (0 until k).map { i =>
-        emb0.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
-          (element_at(col("embedding"), 1).cast("double") + lit(i * 10.0))
-            .as("x"),
-          element_at(col("embedding"), 2).cast("double").as("y"))
-      }.reduce(_ unionAll _),
-      "vec_id", "x", "y", eps = 0.02, minPts = 5L))
-    sweep("kcenter")(k => graft.operators.Coreset.kCenter(
-      embAt(k), "vec_id", "embedding", k = 12))
-
-    // round-9 session-3b families
-    sweep("readability")(k => TextAnalysis.readability(docsAt(k),
-      "doc_id", "text"))
-    sweep("ngram_diversity")(k => TextAnalysis.ngramDiversity(
-      docsAt(k).withColumn("source",
-        (col("doc_id") % 7).cast("string")), "source", "text", n = 3))
-    sweep("ttest")(k => graft.operators.Profile.welchTTest(
-      evAt(k).select(col("event_type"), col("value")), "event_type",
-      "value"))
-    sweep("mannwhitney")(k => graft.operators.Profile.mannWhitneyBinned(
-      evAt(k).select(col("event_type"), col("value")), "event_type",
-      "value", lo = 0.0, hi = 500.0, bins = 1000))
-    sweep("holt")(k => graft.operators.WindowOps.holtSmooth(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "value", 0.5, 0.25,
-      maxHistory = 16))
-    sweep("acf")(k => graft.operators.WindowOps.autocorr(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "value", maxLag = 4))
-    // round-10 additions: the bounded-memory seam paths (GK percentile /
-    // HLL distinct — the 100 TB variants the twin queries pin), the
-    // rollup classification report, and ragged-annotation alpha
-    sweep("interarrival_gk")(k => WindowOps.interArrivalStats(evAt(k),
-      Seq("user_id"), Seq("ts", "event_id"), "event_type", "ts",
-      approxAccuracy = Some(10000)))
-    sweep("gains_gk")(k => graft.operators.Profile.gainsTable(
-      evAt(k).select(((col("event_id") % 1000).cast("double") / 1000.0)
-          .as("score"), (col("value") > 250.0).as("label")),
-      "score", "label", buckets = 10, approxAccuracy = Some(10000)))
-    sweep("ngram_hll")(k => TextAnalysis.ngramDiversity(
-      docsAt(k).withColumn("source",
-        (col("doc_id") % 7).cast("string")), "source", "text", n = 3,
-      approxRsd = Some(0.02)))
-    sweep("class_report")(k => graft.operators.Eval.classificationReport(
-      evAt(k).select(col("event_type"),
-        (col("value") > 250.0).as("label"),
-        ((col("event_id") % 1000) >= 500).as("pred")),
-      "label", "pred", "event_type"))
-    sweep("krippendorff")(k => graft.operators.Eval.krippendorffAlpha(
-      // item count scales with the data (m ≈ 50 per item stays flat),
-      // the realistic annotation-drop shape
-      evAt(k).select(expr("event_id DIV 50").as("item"), col("event_type")),
-      "item", "event_type"))
-    sweep("quantile_norm")(k => graft.operators.FeatureEng.quantileNormalize(
-      evAt(k), "event_id", "event_type", "value",
-      lo = 0.0, hi = 500.0, bins = 50))
-
-    def renderMap(m: scala.collection.Map[String, Seq[Double]]): String =
-      m.map { case (k, v) =>
-        "\"" + k + "\":[" + v.map(x => f"$x%.2f").mkString(",") + "]"
-      }.mkString("{", ",", "}")
-    val json = renderMap(results)
-    val gcJson = renderMap(gcResults)
-    val peakJson = renderMap(peakResults)
     val (jvms1, load1) = (BoxSentinel.jvmCount(), BoxSentinel.loadAvg())
+
+    // a point that threw is recorded as null and named in not_finished
+    def render(f: ((Double, Double, Double)) => Double): String =
+      run.indices.map { i =>
+        "\"" + run(i).name + "\":" + byScale.map(pts =>
+          if (pts(i)._1 < 0) "null" else "%.2f".formatLocal(java.util.Locale.ROOT, f(pts(i))))
+          .mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+    val notFinished = run.indices.flatMap { i =>
+      val ks = scales.indices.filter(j => byScale(j)(i)._1 < 0).map(scales)
+      if (ks.isEmpty) None else Some("\"" + run(i).name + "\":" + ks.mkString("[", ",", "]"))
+    }.mkString("{", ",", "}")
+    val skips = skipped.map(q => "\"" + q.name + "\":\"" + Skipped(q.name) + "\"")
+      .mkString("{", ",", "}")
     val sentinel = BoxSentinel.jsonFields(jvms0, load0, jvms1, load1)
-    println(s"""{"metric":"scale_sweep","scales":[${scales.mkString(",")}],$sentinel,"sec":$json,"gc_sec":$gcJson,"peak_mb":$peakJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"scale_sweep","sf":"$sfDir","cpus":$cpus,"max_heap_mb":${Runtime.getRuntime.maxMemory / 1000000},"scales":${scales.mkString("[", ",", "]")},$sentinel,"sec":${render(_._1)},"gc_sec":${render(_._2)},"peak_mb":${render(_._3)},"not_finished":$notFinished,"skipped":$skips}""")
     spark.stop()
   }
 }

@@ -29,6 +29,20 @@ class ContractParitySpec extends AnyFunSuite {
     assert(names.size == 334, s"${names.size} query records, expected 334")
     assert(SparkEntry.queries.size == names.size &&
       SparkEntry.oracleSql.size == names.size)
+    // `all` concatenates the families and its names are unique, so
+    // the nine families partition it
+    assert(SparkEntry.families.map { case (f, qs) => f -> qs.size } == Seq(
+      "frame" -> 68, "text" -> 43, "dedup" -> 29, "similarity" -> 32,
+      "graph" -> 11, "embedding" -> 6, "multimodal" -> 15,
+      "analytics" -> 94, "stream" -> 36))
+  }
+
+  test("SPARK_GRAFT_ONLY's selector takes query and family names") {
+    assert(SparkEntry.select("q_novel, dedup ,q_novel") ==
+      SparkEntry.families.toMap.apply("dedup").map(_.name))
+    assert(SparkEntry.select("q_cusum,graph").head == "q_cusum")
+    assert(SparkEntry.select("graph").size == 11)
+    intercept[IllegalArgumentException](SparkEntry.select("q_no_such_query"))
   }
 
   test("every query name is a well-formed q_* slug") {
